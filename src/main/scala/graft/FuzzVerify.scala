@@ -584,6 +584,7 @@ object FuzzVerify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     run(spark, seed, n, outDir)
     println(s"""{"metric":"fuzz","seed":"$seed","n":$n,"out":"$outDir"}""")
     spark.stop()

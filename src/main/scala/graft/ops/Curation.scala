@@ -172,7 +172,6 @@ object Curation {
     * heap updates, not a single-task sort of its whole class. */
   def sampleBalanced(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    org.apache.spark.sql.graft.TopK.register(spark)
     val e = Tables.embeddings(spark, sfDir).select($"vec_id", $"label")
     val k = e.groupBy($"label").agg(count(lit(1)).as("n"))
       .agg(min($"n")).as[Long].head().toInt
@@ -824,50 +823,18 @@ object Curation {
     * point. Flags `|v - med| > 3·1.4826·MAD` per event_type (1.4826 scales
     * MAD to σ for normal data).
     *
-    * The medians are EXACT, distributed, and HISTOGRAM-SHAPED (r11): ONE
-    * corpus pass builds the per-group value histogram (groupBy (type,
-    * value) count — map-side combinable), and every later stage runs on
-    * the |distinct values| frame, never the corpus. A weighted-median
-    * pass ranks the histogram's CUMULATIVE counts: a distinct value
-    * covers positions [hi−c+1, hi], the two middle positions select ≤2
-    * rows per group, avg — identical output to ranking raw rows (equal
-    * values are interchangeable under ORDER BY value), which is what the
-    * row-level oracle still does. Deviations fold the same way
-    * (|v−med| histogram re-aggregated), and the outlier count is a
-    * weighted sum off the dev histogram — the corpus is read EXACTLY
-    * once (the r10 shape scanned it 3×). The rank pass's per-group sort
-    * shrinks from all rows to the value domain (49k vs 100k at sf0.1;
-    * at 100 TB a sensor/price domain is orders of magnitude below row
-    * count) — swap in `approx_percentile(0.5)` when even the domain is
-    * unbounded and exactness isn't contractual. Measured r11 (sf0.1,
-    * one-query lane): histogram cold 3.1 s vs row-rank 2.9 s — the
-    * fixed extra-job overhead of the dev regroup, paid at a scale where
-    * the domain is still half the row count; the shape is kept because
-    * the 100× story (one corpus scan instead of three, map-side
-    * combinable first stage, sorts bounded by domain not rows) is what
-    * the operator is for. An explicit .cache() on the histogram was the
-    * measured-negative variant (cold 3.7 s): the four consumers build
-    * identical subtrees, so ReuseExchange already materializes the
-    * aggregate once per action with no cache-entry lifecycle. */
+    * ONE distributed aggregation: the map-side-combinable
+    * (event_type, value) histogram is the only corpus-bound stage, and it
+    * is COLLECTED to the driver — a frame bounded by the value domain,
+    * not the row count (49k rows / ~1.5 MB at sf0.1). Every derived stage
+    * is exact driver arithmetic over it: both weighted medians (a distinct
+    * value covers positions [hi−c+1, hi] of the value-ascending
+    * histogram; the ≤2 middle positions are averaged), the deviation
+    * re-histogram and the outlier count. The collect grows with the value
+    * domain: swap in `approx_percentile(0.5)` when even the domain is
+    * unbounded and exactness isn't contractual. */
   def anomalyMad(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // SINGLE-PASS shape (r20, r19 verdict item 6): ONE distributed
-    // aggregation — the map-side-combinable (type, value) histogram, the
-    // only corpus-bound stage — then every derived stage (both weighted
-    // medians, the deviation re-histogram, the outlier count) is exact
-    // driver arithmetic over the ≤ |distinct (type, value)| frame (49k
-    // rows / ~1.5 MB at sf0.1). The r11 shape ran the same logic as four
-    // plan consumers (two window passes, a dev re-shuffle, two broadcast
-    // subtrees + final agg) off a ReuseExchange'd histogram — correct,
-    // but ~4 extra stages and two window sorts for 5 output rows.
-    // Driver-side is the right side for this frame: the old plan already
-    // ranked each type's ENTIRE value domain in one window partition
-    // (5 single-partition WindowExecs), so per-slot memory was O(domain)
-    // either way — the domain (a sensor/price/score space), not the
-    // corpus, bounds both shapes, and the docstring's standing escape
-    // hatch (swap in approx_percentile(0.5) when even the domain is
-    // unbounded and exactness isn't contractual) is unchanged.
-    //
     // Exactness: every driver step replicates the retired plan's
     // EXPRESSIONS over the same inputs — cumulative-position middle
     // selection ((n+1) div 2, n div 2 + 1 over the value-ascending

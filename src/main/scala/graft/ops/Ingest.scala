@@ -308,19 +308,21 @@ object Ingest {
     existingKeys(spark, sfDir).select($"external_id").orderBy($"external_id")
   }
 
-  /** Error-report line: null→"", strip every comma from each cell, join
-    * with "," and append the reason (naive CSV escape of the reference,
-    * BackgroundCsvProcessor.java:286-293). */
+  /** Error-report line of a classified row: the raw cells, null→"",
+    * every comma stripped, joined with "," and the reason appended (naive
+    * CSV escape of the reference, BackgroundCsvProcessor.java:286-293). */
+  def reportLine: Column = {
+    def cell(c: String): Column = regexp_replace(coalesce(col(c), lit("")), ",", "")
+    concat_ws(",", cell("external_id_raw"), cell("name_raw"),
+      cell("quantity_raw"), cell("expiry_raw"), col("error"))
+  }
+
+  /** Error-report lines of the rejected rows, in line order. */
   def cleanCommaStrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    def cell(c: Column): Column = regexp_replace(coalesce(c, lit("")), ",", "")
     classified(spark, sfDir)
       .filter($"error".isNotNull)
-      .select($"line_id",
-        concat_ws(",",
-          cell($"external_id_raw"), cell($"name_raw"),
-          cell($"quantity_raw"), cell($"expiry_raw"),
-          $"error").as("report_line"))
+      .select($"line_id", reportLine.as("report_line"))
       .orderBy($"line_id")
   }
 

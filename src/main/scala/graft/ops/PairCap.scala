@@ -41,9 +41,7 @@ object PairCap {
     * determinism). Identity when the dial is off. */
   def cap(df: DataFrame, leftId: Column, order: Column*): DataFrame =
     maxPerId(df.sparkSession) match {
-      case Some(k) =>
-        TopK.register(df.sparkSession)
-        TopK.perKey(df, leftId, k, order: _*)
+      case Some(k) => TopK.perKey(df, leftId, k, order: _*)
       case None => df
     }
 }

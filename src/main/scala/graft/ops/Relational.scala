@@ -1282,7 +1282,6 @@ object Relational {
     * tiebreakers so the result is total-ordered and oracle-checkable. */
   def topkPerKeyNative(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    org.apache.spark.sql.graft.TopK.register(spark)
     val li = Tables.lineitem(spark, sfDir)
       .select($"l_suppkey", $"l_orderkey", $"l_linenumber", $"l_extendedprice")
     org.apache.spark.sql.graft.TopK.perKey(li, $"l_suppkey", 3,

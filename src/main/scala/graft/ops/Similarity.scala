@@ -77,7 +77,6 @@ object Similarity {
   /** Brute-force cosine top-50 of every embedding vs the probe vector
     * (vec_id = 0): broadcast the probe, one map pass, TakeOrdered top-k. */
   def simCosineProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
     val probe = broadcast(e.filter($"vec_id" === 0)
@@ -97,7 +96,6 @@ object Similarity {
     * at the parquet level, the embedding join is an equi-join on the doc
     * key, and top-k is a TakeOrdered heap — no global sort, no all-pairs. */
   def simHybridSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
       .filter(array_contains(TextSim.tokens($"text"), "vector"))
@@ -138,7 +136,6 @@ object Similarity {
     * bounded-frame exception), and the fusion is a k×k full-outer join.
     * Corpus-size-dependent work = the two ranker scans, nothing else. */
   def simRrfFusion(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val wTf = Window.orderBy($"tf".desc, $"doc_id")
     val lex = Tables.documents(spark, sfDir)
@@ -174,7 +171,6 @@ object Similarity {
     * oracle pins every per-element division, not just the summary. Pure
     * per-row math: linear, no shuffle, codegen'd. */
   def embedNormalize(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("e"))
@@ -220,7 +216,6 @@ object Similarity {
     * subvectors — the PQ subspace view, shared by the quantizer, the
     * codebook build, and the IVF-PQ probe's own subvector extraction. */
   private[graft] def pqSubs(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
@@ -290,7 +285,6 @@ object Similarity {
     * engines, so the integer checksum and the decimal scale hash-match.
     * Linear, per-row, no shuffle. */
   def embedQuantize(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("e"))
@@ -364,7 +358,6 @@ object Similarity {
     * kNN for hot labels, exact everywhere else; same policy as Spark's
     * own MinHashLSH: exact within small buckets, banded elsewhere). */
   def simKnnPerLabel(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     // Precompute each vector's norm once (per-vector, not per-pair): the
     // pair stage then evaluates a single dot fold instead of three —
@@ -394,7 +387,6 @@ object Similarity {
     * rotation, the plan shape is identical: bucket-key equi-join instead
     * of a full cross join. */
   def simAnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     def bucket(v: Column): Column =
       (element_at(v, 1) > 0.0).cast("int") * 4 +
@@ -478,7 +470,6 @@ object Similarity {
     * members and probe guarantees the probe's own vector is inside the
     * searched list. */
   def simIvfProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val assigned = ivfAssigned(Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v")))
@@ -503,7 +494,6 @@ object Similarity {
     * a window over the |centroids|-row score frame — bounded before any
     * exchange (PlanSpec's boundedFrameOk), never a corpus sort. */
   def simIvfNprobe(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
@@ -542,7 +532,6 @@ object Similarity {
     * combinable SUM over 4-row groups, and raw vectors are read only to
     * BUILD the index, never at query time. */
   def simIvfpqSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
@@ -593,7 +582,6 @@ object Similarity {
   val MrlShortlist = 200
 
   def simMrlRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", vecd($"embedding").as("v"))
@@ -630,7 +618,6 @@ object Similarity {
     * the late-interaction cost model (|query parts|·|doc parts| per
     * pair) with candidate generation left to the ANN tiers. */
   def simMaxsim(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val subs = pqSubs(spark, sfDir).select($"vec_id", $"m", $"vs")
     val probe = broadcast(subs.filter($"vec_id" === 0)
@@ -665,7 +652,6 @@ object Similarity {
     * k×dim centroid table + one map-pass argmin — the canonical
     * distributed k-means shape; iterations add linearly. */
   def embedKmeans(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
@@ -740,7 +726,6 @@ object Similarity {
     * cosine bit-exactly via the HOF fold, canonical a<b ordering, and
     * cell bounding. */
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val assigned = ivfAssigned(Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v")))
@@ -968,7 +953,6 @@ object Similarity {
     * only inside sign-LSH buckets — the bounded-work backstop at
     * approximate recall, non-binding on the declared corpus). */
   def dedupEmbeddingCosine(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val raw = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
@@ -1988,7 +1972,6 @@ object Similarity {
     * majority pick is a min_by over the (-count, label) struct, never a
     * per-cell sort. */
   def embedClusterPurity(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))

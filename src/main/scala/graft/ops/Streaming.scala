@@ -626,14 +626,7 @@ object Streaming {
       // boundaries are unchanged, so every consumer's rows are too.
       val parts = stageEvents(child, sfDir, 3)
       new java.io.File(s"$stage/staged").mkdirs(): Unit
-      def admit(f: java.io.File): Unit = {
-        val dst = java.nio.file.Paths.get(s"$stage/staged/${f.getName}")
-        try java.nio.file.Files.createLink(dst, f.toPath): Unit
-        catch { case _: UnsupportedOperationException =>
-          java.nio.file.Files.copy(f.toPath, dst,
-            java.nio.file.StandardCopyOption.COPY_ATTRIBUTES): Unit
-        }
-      }
+      def admit(f: java.io.File): Unit = Streaming.admit(f, s"$stage/staged")
       def srcDf = child.readStream.schema(schema)
         .option("pathGlobFilter", "part-*")
         .option("maxFilesPerTrigger", "1")
@@ -1002,6 +995,22 @@ object Streaming {
 
   // ----------------------------------------------- true streaming (no oracle)
 
+  /** Admit staged file `src` into the watched directory `dir`: a hard
+    * link (it shares the already-stamped mtime that orders admission),
+    * or a copy with its attributes where no link can be made — a
+    * filesystem without hard links, or `dir` on another device. An
+    * existing target still fails. */
+  private[graft] def admit(src: java.io.File, dir: String): Unit = {
+    val dst = java.nio.file.Paths.get(dir, src.getName)
+    try java.nio.file.Files.createLink(dst, src.toPath): Unit
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException => throw e
+      case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+        java.nio.file.Files.copy(src.toPath, dst,
+          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES): Unit
+    }
+  }
+
   /** Raw events stream with ts re-typed (file source needs the explicit
     * schema; dtype branch mirrors Tables.events — nanos-long vs µs
     * TIMESTAMP_NTZ layouts of the harness parquet). */
@@ -1018,10 +1027,12 @@ object Streaming {
 
   /** Staged-input registry: the stream family has several multi-batch
     * consumers of the SAME staged layout, so the table is staged once per
-    * (sfDir, parts) and reused until the family-boundary sweep deletes
-    * the files ([[sweepScratch]] clears the registry in the same breath)
-    * — the stage-once / consume-many shape shared input staging has in
-    * production, and ~1 s per consumer saved locally. */
+    * (sfDir, parts) and reused for the whole pass: the family-boundary
+    * [[sweepScratch]] leaves the staged subtree alone, and only the
+    * closing [[sweepAllScratch]] deletes the files and clears the
+    * registry in the same breath — the stage-once / consume-many shape
+    * shared input staging has in production, and ~1 s per consumer saved
+    * locally. */
   private val stagedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -2959,14 +2970,7 @@ object Streaming {
     // move-in-waves admission and batch boundaries are unchanged.
     val parts = stageEvents(child, sfDir, 3)
     new java.io.File(s"$dir/staged").mkdirs(): Unit
-    def admit(f: java.io.File): Unit = {
-      val dst = java.nio.file.Paths.get(s"$dir/staged/${f.getName}")
-      try java.nio.file.Files.createLink(dst, f.toPath): Unit
-      catch { case _: UnsupportedOperationException =>
-        java.nio.file.Files.copy(f.toPath, dst,
-          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES): Unit
-      }
-    }
+    def admit(f: java.io.File): Unit = Streaming.admit(f, s"$dir/staged")
     def run(): Unit = {
       import child.implicits._
       val out = child.readStream.schema(schema)

@@ -710,7 +710,6 @@ object TextSim {
     * Same two expressions Spark's own runtime row-level filtering
     * injects (pinned in RuntimeFilterSpec). */
   def dedupBloomPrefilter(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("graft_docs_bloom")
     // might_contain requires its bloom as a constant or scalar subquery —
     // the same contract Spark's own injected runtime filters satisfy — so

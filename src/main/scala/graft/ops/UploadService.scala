@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{ExecutionContext, Future}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's COMPLETE user-facing workflow as one Spark-native
   * facade — what a user of streamforge-data-pipeline actually calls:
@@ -32,6 +33,12 @@ object UploadService {
   final case class UploadResult(processed: Long, inserted: Long, failed: Long,
                                 loadedDir: String, errorReportDir: String,
                                 errorCounts: Map[String, Long])
+
+  /** The upload's four cells as strings, plus the reader's record of any
+    * line whose token count is not four. */
+  private val UploadSchema = StructType(
+    Seq("externalId", "name", "quantity", "expiryDate", "_corrupt_record")
+      .map(StructField(_, StringType)))
 
   final class Service(spark: SparkSession, existing: DataFrame, outBase: String)
                      (implicit ec: ExecutionContext = ExecutionContext.global) {
@@ -63,13 +70,17 @@ object UploadService {
     private def process(jobId: String, csvPath: String, mode: CommitMode,
                         chunkRows: Int): UploadResult = try {
       import spark.implicits._
-      // header CSV, all columns as strings (no inference — deterministic).
+      // header CSV read with an explicit four-string schema (no header
+      // inference job). An empty cell reads as null, like a missing one;
+      // only a row with a token count other than four gets a
+      // `_corrupt_record`, so "too few columns" is a corrupt row whose
+      // last cell is missing (a long row keeps its first four cells).
       // Explicit global line id via zipWithIndex: contiguous and
       // independent of the split layout (a CSV big enough to be read as
       // multiple splits gets the same ids), unlike
       // monotonically_increasing_id whose values encode the partitioning.
       val parsed = spark.read.option("header", "true")
-        .option("mode", "PERMISSIVE").csv(csvPath)
+        .option("mode", "PERMISSIVE").schema(UploadSchema).csv(csvPath)
       // persist the parsed rows across zipWithIndex's two passes: it
       // first runs a partition-size job, then the data pass — uncached,
       // both would re-scan and re-parse the CSV
@@ -84,18 +95,18 @@ object UploadService {
           col("name").as("name_raw"),
           col("quantity").as("quantity_raw"),
           col("expiryDate").as("expiry_raw"),
-          (col("externalId").isNotNull && col("name").isNotNull &&
-            col("quantity").isNotNull && col("expiryDate").isNotNull).as("arity_ok"))
+          (col("_corrupt_record").isNull || col("expiryDate").isNotNull).as("arity_ok"))
       val classified = Ingest.classifyStaged(raw, existing).cacheOnce()
       val (counted, detach) = Progress.instrumented(classified, jobId, statusStore)
       try {
         statusStore.update(jobId, Progress.Status("PROCESSING", "classifying", 0L, -1L))
-        val agg = counted.agg(
-          count(lit(1)).as("processed"),
-          count(when($"error".isNull, 1)).as("inserted"),
-          count(when($"error".isNotNull, 1)).as("failed")).head()
-        val (processed, inserted, failed) =
-          (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+        // one aggregation gives the counters and the error histogram
+        val byError = counted.groupBy($"error").count().collect()
+          .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+        val processed = byError.values.sum
+        val inserted = byError.getOrElse(None, 0L)
+        val failed = processed - inserted
+        val errorCounts = byError.collect { case (Some(e), n) => e -> n }
 
         statusStore.update(jobId, Progress.Status("WRITING",
           s"loading $inserted valid rows", processed, processed))
@@ -115,15 +126,8 @@ object UploadService {
         val errorReportDir = s"$outBase/$jobId/errors"
         classified.filter($"error".isNotNull)
           .orderBy($"line_id")
-          .select(concat_ws(",",
-            regexp_replace($"ext", ",", ""), regexp_replace($"nam", ",", ""),
-            regexp_replace($"qty", ",", ""), regexp_replace($"exp", ",", ""),
-            $"error").as("report_line"))
+          .select(Ingest.reportLine.as("report_line"))
           .write.mode(SaveMode.Overwrite).text(errorReportDir)
-
-        val errorCounts = classified.filter($"error".isNotNull)
-          .groupBy($"error").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
         statusStore.update(jobId, Progress.Status("JOB_COMPLETE",
           s"inserted=$inserted failed=$failed", processed, processed))

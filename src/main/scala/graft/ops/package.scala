@@ -35,9 +35,14 @@ package graft
   *  - [[graft.ops.Progress]] — accumulator-fed job-status store
   *
   * Native extensions live under `org.apache.spark.sql.graft`: the
-  * codegen'd `graft_dot` expression, the `BandedLevenshteinRule`
-  * optimizer rule, and the `TopKPerKey` operator stack — all injected via
-  * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
+  * codegen'd `graft_dot` expression and the bloom pair
+  * (`graft_bloom_agg`, `graft_might_contain`), the `BandedLevenshteinRule`
+  * and `FirstRowPerKeyRule` optimizer rules, and the `TopKPerKey`
+  * operator stack. `GraftExtensions` is their one list: injected via
+  * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`, or
+  * added to a running session by the idempotent
+  * `GraftExtensions.install(spark)`, which `SparkEntry.queries` calls
+  * before every query.
   */
 package object ops {
 

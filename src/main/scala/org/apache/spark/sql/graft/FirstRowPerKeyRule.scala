@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -49,14 +48,5 @@ object FirstRowPerKeyRule extends Rule[LogicalPlan] {
       Project(projList,
         TopKPerKeyNode(part, order, asLimit(cond, al.exprId).get, child))
     case p => p
-  }
-
-  /** Register the rule plus the strategy that plans its target node. */
-  def register(spark: SparkSession): Unit = {
-    TopK.register(spark)
-    if (!spark.experimental.extraOptimizations.contains(FirstRowPerKeyRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FirstRowPerKeyRule
-    }
   }
 }

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -99,7 +99,8 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 /** Public API: `TopK.perKey(df, $"key", 3, $"value".desc, $"id".asc)`.
   * The order must be total (add unique tiebreakers) for deterministic
-  * results. */
+  * results. The frame's session must carry [[GraftExtensions]] (config
+  * or `install`), whose strategy plans the node. */
 object TopK {
   def perKey(df: DataFrame, key: Column, k: Int, order: Column*): DataFrame = {
     val session =
@@ -115,12 +116,4 @@ object TopK {
       TopKPerKeyNode(Seq(session.expression(key)), sortOrder, k,
         df.queryExecution.analyzed))
   }
-
-  /** Idempotent strategy registration for sessions built without the
-    * extensions config. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, Levenshtein}
-import org.apache.spark.sql.graft.GraftFunctions
 
 /** BandedLevenshteinRule: `levenshtein(a,b) <= k` filters must optimize to
   * the banded threshold DP without changing results. Frames are parquet-
@@ -22,7 +21,6 @@ class OptimizerRuleSpec extends SparkSuite {
     })}.flatten.nonEmpty
 
   test("<=, <, and flipped comparisons rewrite to the banded form") {
-    GraftFunctions.register(spark)
     val unopt = docs.select(levenshtein($"a", $"b").as("d"))
       .filter($"d" <= 4).count()
     for (cond <- Seq(
@@ -37,7 +35,6 @@ class OptimizerRuleSpec extends SparkSuite {
   }
 
   test("unbounded comparisons and projections stay on the full DP") {
-    GraftFunctions.register(spark)
     // projecting the distance itself must NOT be rewritten
     val proj = docs.select(levenshtein($"a", $"b").as("d"))
     assert(!hasBanded(proj))
@@ -47,7 +44,6 @@ class OptimizerRuleSpec extends SparkSuite {
   }
 
   test("rewrite preserves null propagation") {
-    GraftFunctions.register(spark)
     val q = docs.filter(levenshtein($"a", $"maybe_null") <= 28)
     assert(hasBanded(q))
     val viaProjection = docs
@@ -58,13 +54,9 @@ class OptimizerRuleSpec extends SparkSuite {
 
   // ---------------------------------------------------- FirstRowPerKeyRule
 
-  /** Isolated session: the rule is session-global, and these tests must
-    * not change other suites' plans. */
-  private lazy val ruleSession = {
-    val s = spark.newSession()
-    org.apache.spark.sql.graft.FirstRowPerKeyRule.register(s)
-    s
-  }
+  /** The shared session carries the rule; a `newSession()` child has
+    * none of graft's extensions, so it plans the plain window form. */
+  private lazy val plainSession = spark.newSession()
 
   private def heapIn(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collect {
@@ -73,9 +65,7 @@ class OptimizerRuleSpec extends SparkSuite {
 
   test("row_number=1 dedup with rank dropped rewrites to the heap operator") {
     import org.apache.spark.sql.expressions.Window
-    val s = ruleSession
-    import s.implicits._
-    val ev = s.read.parquet(s"$sfDir/orders.parquet")
+    val ev = spark.read.parquet(s"$sfDir/orders.parquet")
       .select($"o_custkey", $"o_orderkey", $"o_totalprice")
     val w = Window.partitionBy($"o_custkey").orderBy($"o_orderkey")
     def pattern(df: org.apache.spark.sql.DataFrame) = df
@@ -84,13 +74,14 @@ class OptimizerRuleSpec extends SparkSuite {
     val q = pattern(ev)
     assert(heapIn(q), s"no heap rewrite in:\n${q.queryExecution.optimizedPlan}")
     // same rows as the un-rewritten window form on a plain session
-    val expected = Tables.orders(spark, sfDir)
+    val plain = Tables.orders(plainSession, sfDir)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))))
       .filter(col("rn") === 1).drop("rn")
-      .orderBy(col("o_custkey"))
+    assert(!heapIn(plain), "the plain session must keep the window form")
+    val expected = plain.orderBy(col("o_custkey"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val got = q.orderBy($"o_custkey")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -106,9 +97,7 @@ class OptimizerRuleSpec extends SparkSuite {
 
   test("rank survivors and rank() variants stay on the window plan") {
     import org.apache.spark.sql.expressions.Window
-    val s = ruleSession
-    import s.implicits._
-    val ev = s.read.parquet(s"$sfDir/orders.parquet")
+    val ev = spark.read.parquet(s"$sfDir/orders.parquet")
       .select($"o_custkey", $"o_orderkey")
     val w = Window.partitionBy($"o_custkey").orderBy($"o_orderkey")
     // rank column kept in the output → heap cannot produce it

@@ -354,7 +354,6 @@ class PlanSpec extends SparkSuite {
   test("topk_per_key_native plans the custom heap operator, no sort below it") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    org.apache.spark.sql.graft.TopK.register(spark)
     val li = Tables.lineitem(spark, sfDir)
       .select($"l_suppkey", $"l_orderkey", $"l_linenumber", $"l_extendedprice")
     // without the final presentation orderBy: the operator itself must

@@ -10,7 +10,6 @@ class SimilaritySpec extends SparkSuite {
   import spark.implicits._
 
   test("native graft_dot is bit-identical to the zip_with/aggregate fold") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val mismatches = e.select(
@@ -22,7 +21,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("graft_dot matches the interpreted fold on arbitrary vectors (ScalaCheck)") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     // independent lengths on purpose: unequal-length pairs must be NULL
     // on BOTH sides (zip_with null-pads the shorter side, the fold
     // poisons; graft_dot mirrors that)
@@ -45,7 +43,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("graft_dot NULL semantics: length mismatch / null element / null array") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         | graft_dot(array(1.0D, 2.0D), array(1.0D))                      AS len_mismatch,
@@ -250,7 +247,6 @@ class SimilaritySpec extends SparkSuite {
     // the cross-cloud cell pairs (centroid distance ~2, radii small)
     // while changing NOTHING in the output — the prune is lossless by
     // construction, and this pins it on data where it actually bites.
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     def cloud(sign: Double, n: Int, idBase: Long) = (0 until n).map { i =>
       val raw = Array.tabulate(8)(j =>
@@ -292,7 +288,6 @@ class SimilaritySpec extends SparkSuite {
     // hardcoded 16. Raising K shrinks radii, which can only exclude MORE
     // cell pairs — lossless at any K, pinned here on the two-cloud
     // fixture: K=32 candidates ≤ default candidates, accept set equal.
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     def cloud(sign: Double, n: Int, idBase: Long) = (0 until n).map { i =>
       val raw = Array.tabulate(8)(j =>
@@ -720,7 +715,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("sim_ivfpq_search: probe ranks first (ADC lower bound), ADC values match a reference recomputation") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val res = Similarity.simIvfpqSearch(spark, sfDir).collect()
     assert(res.length == 10)
@@ -768,7 +762,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("sim_mrl_rerank: probe ranks first at cosine 1, prefix funnel recalls the exact top-10") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val res = Similarity.simMrlRerank(spark, sfDir).collect()
     assert(res.length == 10)
@@ -915,7 +908,6 @@ class SimilaritySpec extends SparkSuite {
 
   test("embed_cluster_purity: naive replay over the shared quantizer assignment") {
     import org.apache.spark.sql.functions._
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
     val assigned = Similarity.ivfAssigned(e).select($"vec_id", $"cell")

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per JVM (suites reuse it via getOrCreate — same configs
-  * as Verify/Bench so plan behavior matches the driver's runs). */
+  * as Verify/Bench so plan behavior matches the driver's runs). graft's
+  * extensions are installed once at creation, so every suite plans with
+  * the same rule set whatever the suite order. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
@@ -23,6 +25,7 @@ object SparkSuite {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.GraftExtensions.install(s)
     s
   }
 }

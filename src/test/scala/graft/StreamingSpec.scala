@@ -1562,4 +1562,47 @@ class StreamingSpec extends SparkSuite {
       rm(new java.io.File(dir))
     }
   }
+
+  test("staged-file admission links on one device and copies across devices") {
+    import java.nio.file.{FileAlreadyExistsException, FileSystemException, Files, Path, Paths}
+    import java.nio.file.attribute.FileTime
+    def rm(p: Path): Unit = {
+      Option(p.toFile.listFiles).toSeq.flatten.foreach(f => rm(f.toPath))
+      Files.deleteIfExists(p): Unit
+    }
+    val target = Paths.get("target")
+    Files.createDirectories(target)
+    val stamp = FileTime.fromMillis(1700000000000L)
+    def staged(dir: Path): Path = {
+      val f = Files.createTempFile(dir, "part-admit", ".parquet")
+      Files.write(f, "staged bytes".getBytes)
+      Files.setLastModifiedTime(f, stamp)
+    }
+    // same device: a hard link
+    val local = Files.createTempDirectory(target, "graft-admit-src")
+    val into = Files.createTempDirectory(target, "graft-admit-dst")
+    val shm = Paths.get("/dev/shm")
+    val remote = if (Files.isDirectory(shm) &&
+        Files.getFileStore(shm) != Files.getFileStore(target)) Some(staged(shm)) else None
+    try {
+      val src = staged(local)
+      Streaming.admit(src.toFile, into.toString)
+      assert(Files.isSameFile(src, into.resolve(src.getFileName)))
+      // an existing target is an error, not a silent copy
+      intercept[FileAlreadyExistsException](Streaming.admit(src.toFile, into.toString))
+      // another device (a tmpfs): the link fails, admit copies instead,
+      // keeping the bytes and the mtime that orders admission
+      assume(remote.isDefined, "no tmpfs on a device other than target/")
+      val far = remote.get
+      intercept[FileSystemException](Files.createLink(into.resolve("probe"), far))
+      Streaming.admit(far.toFile, into.toString)
+      val copy = into.resolve(far.getFileName)
+      assert(!Files.isSameFile(far, copy))
+      assert(Files.readAllBytes(copy).sameElements(Files.readAllBytes(far)))
+      assert(Files.getLastModifiedTime(copy) == stamp)
+    } finally {
+      remote.foreach(Files.deleteIfExists)
+      rm(local); rm(into)
+    }
+  }
 }

@@ -108,6 +108,41 @@ class UploadServiceSpec extends SparkSuite {
     } finally spark.conf.set(key, prev)
   }
 
+  test("empty cells are nullable values, not missing columns; report lines keep raw cells") {
+    val dir = Files.createTempDirectory("graft_upload_empty").toString
+    val csv = s"$dir/upload.csv"
+    val lines = Seq("externalId,name,quantity,expiryDate",
+      "P1,Widget,5,2026-09-01",
+      "P2,Widget,,2026-09-01",          // empty quantity: valid
+      "P3,Widget,5,",                   // empty expiryDate: valid
+      "P4,Widget,,",                    // both empty: valid
+      "P5,,5,2026-09-01",               // empty name
+      "P6,OnlyTwo",                     // short row
+      "   ,Widget,5,2026-09-01",        // whitespace-only externalId
+      "P7,Widget,5,2026-09-01,extra")   // long row keeps its first four cells
+    Files.write(Paths.get(csv), lines.mkString("", "\n", "\n").getBytes)
+    val out = Files.createTempDirectory("graft_upload_empty_out").toString
+    val svc = new UploadService.Service(spark,
+      Seq.empty[String].toDF("external_id"), out)
+    val res = svc.await(svc.submit(csv, UploadService.AllOrNothing))
+    assert((res.processed, res.inserted, res.failed) == ((8L, 5L, 3L)))
+    assert(res.errorCounts == Map("name empty" -> 1L,
+      "too few columns" -> 1L, "externalId empty" -> 1L))
+    val loaded = spark.read.parquet(res.loadedDir).collect()
+      .map(r => r.getString(0) -> (Option(r.get(2)), Option(r.get(3)).map(_.toString)))
+      .toMap
+    assert(loaded.keySet == Set("P1", "P2", "P3", "P4", "P7"))
+    assert(loaded("P2") == ((None, Some("2026-09-01"))))
+    assert(loaded("P3") == ((Some(5), None)))
+    assert(loaded("P4") == ((None, None)))
+    assert(loaded("P7") == ((Some(5), Some("2026-09-01"))))
+    // the reference's report line: raw cells, null as "", commas stripped
+    assert(spark.read.text(res.errorReportDir).collect().map(_.getString(0)).toSet == Set(
+      "P5,,5,2026-09-01,name empty",
+      "P6,OnlyTwo,,,too few columns",
+      "   ,Widget,5,2026-09-01,externalId empty"))
+  }
+
   test("a missing input fails the job with JOB_FAILED status") {
     val out = Files.createTempDirectory("graft_upload_out3").toString
     val svc = new UploadService.Service(spark,
