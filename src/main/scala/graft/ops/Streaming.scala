@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.Tables
 
 /** Streaming pack (SURVEY.md §2.B) over `events`.
@@ -410,82 +410,65 @@ object Streaming {
     ScratchRoot + s"/$StagedDirName/" +
       java.util.UUID.randomUUID.toString.replace("-", "")
 
-  /** Diagnostic progress dump (SPARK_GRAFT_STREAM_DEBUG=1): per-batch
-    * durationMs breakdown from StreamingQueryProgress — the measure-first
-    * hook for attributing a run's wall time to addBatch vs state commit
-    * vs offset log, without a UI in the sandbox. */
-  private def debugProgress(tag: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-debug] $tag batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-          s"stateOps=${p.stateOperators.map(s =>
-            s"(commitMs=${s.commitTimeMs} updMs=${s.allUpdatesTimeMs} " +
-              s"rmMs=${s.allRemovalsTimeMs} mem=${s.memoryUsedBytes})").mkString}")
-      }
-
   /** Run independent driver-side jobs concurrently (guide §2.6): Spark's
     * scheduler happily overlaps jobs submitted from several threads, so
     * N short jobs whose tails would otherwise leave the pool idle
-    * back-fill each other. Exceptions propagate (first failure wins) —
-    * but only after EVERY job has settled (r20, r19 advice item 3): a
-    * fail-fast Future.sequence returned while sibling state reads were
-    * still running, and callers then deleted the checkpoint dir those
-    * readers were scanning — the straggler died with an opaque
-    * missing-file error that masked the primary failure. */
-  private def runConcurrently(jobs: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
+    * back-fill each other. The first failure is logged the moment it
+    * happens and rethrown once every sibling has settled — callers delete
+    * the checkpoint the siblings read after this returns, and a straggler
+    * that loses its files would die with a missing-file error that masks
+    * the real cause. Settling is bounded by [[StragglerWait]]: a sibling
+    * still running then is named in a suppressed exception instead of
+    * hiding the failure forever. */
+  private[graft] def runConcurrently(jobs: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val settled =
-      Await.result(Future.sequence(jobs.map(j => Future(scala.util.Try(j())))),
-        Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
+    val firstFailure = Promise[Throwable]()
+    val running = jobs.zipWithIndex.map { case (job, i) =>
+      Future(job()).andThen { case scala.util.Failure(e) =>
+        if (firstFailure.trySuccess(e))
+          System.err.println(s"Streaming.runConcurrently: job ${i + 1} of " +
+            s"${jobs.size} failed, waiting for the rest: $e")
+      }
+    }
+    val settled = Future.sequence(running.map(_.transform(scala.util.Success(_))))
+    Await.ready(Future.firstCompletedOf(Seq(settled, firstFailure.future)),
+      Duration.Inf)
+    firstFailure.future.value.foreach { t =>
+      val e = t.get
+      scala.util.Try(Await.ready(settled, StragglerWait))
+      val unfinished = running.indices.filterNot(running(_).isCompleted)
+      if (unfinished.nonEmpty)
+        e.addSuppressed(new java.util.concurrent.TimeoutException(
+          s"job(s) ${unfinished.map(_ + 1).mkString(", ")} of ${jobs.size} " +
+            s"still running $StragglerWait after the first failure"))
+      throw e
+    }
   }
 
-  /** Result dirs handed out as LAZY read-back frames and not yet swept:
-    * every stream query registers the path its returned DataFrame reads,
-    * and [[sweepScratch]] drains the registry with one stderr line naming
-    * what it invalidated — so a caller that held an unmaterialized frame
-    * across the family boundary has the lifecycle violation named at
-    * sweep time, next to the missing-path error it will hit (r13 advice:
-    * make the materialize-before-boundary contract mechanical, not
-    * comment-only). */
-  private val liveOuts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** How long [[runConcurrently]] lets the siblings of a failed job
+    * finish: far above any one state read here, far below forever. */
+  private val StragglerWait = scala.concurrent.duration.Duration(2, "minutes")
 
   /** Delete every streaming scratch dir EXCEPT the pinned `pairs/` and
-    * `staged-inputs/` subtrees (see [[runPairedOnce]]: an emitted ⊕
-    * buffered pair's two board members live in different name-prefix
-    * families — `scan_*` vs `stream_*` — so the shared run's output must
-    * survive the family boundaries between them; staged INPUT layouts
-    * (r20) get the same lifetime for the same reason — the det-cut and
-    * sampled stagings are consumed by runs in BOTH families, and
-    * re-staging the identical input layout per family was two extra
-    * corpus passes per board; [[sweepAllScratch]] is the closing sweep
-    * that takes both pinned subtrees too). Callers must not hold an
-    * unmaterialized frame returned by a non-pair stream query across
-    * this call — the same lifecycle contract plan-keyed caches already
-    * have at the family boundary. */
-  def sweepScratch(): Unit = {
-    if (!liveOuts.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      val sample = liveOuts.asScala.take(3).mkString(", ")
-      System.err.println(
-        s"Streaming.sweepScratch: invalidating ${liveOuts.size} lazy " +
-          s"stream result dir(s) ($sample ...) - any frame still reading " +
-          "one of these is now a missing-path error")
-      liveOuts.clear()
-    }
+    * `staged-inputs/` subtrees. A run registered with [[runOnce]] serves
+    * queries in both board families (`scan_*` vs `stream_*`), so its
+    * output must survive the family boundaries between them; the staged
+    * input layouts are consumed by runs in both families too.
+    * [[sweepAllScratch]] is the closing sweep that takes both pinned
+    * subtrees. Callers must not hold an unmaterialized frame returned by
+    * a stream query across this call (a frame reading a swept dir fails
+    * with a missing-path error naming it) — the same lifecycle contract
+    * plan-keyed caches have at the family boundary. */
+  def sweepScratch(): Unit =
     Option(new java.io.File(ScratchRoot).listFiles()).toSeq.flatten
       .filterNot(f => f.getName == PairsDirName || f.getName == StagedDirName)
       .foreach(deleteRec)
-  }
 
   /** Closing sweep: everything [[sweepScratch]] takes PLUS the pinned
-    * pair-run and staged-input subtrees — the judge-checkable "a full
-    * pass leaves target/stream empty" contract's entry point (Bench and
+    * shared-run and staged-input subtrees — the "a full pass leaves
+    * target/stream empty" contract's entry point (Bench and
     * Verify call this once, after their last query). */
   def sweepAllScratch(): Unit = {
     resetPairRuns()
@@ -518,11 +501,11 @@ object Streaming {
     val base =
       if (parts == 3) {
         // board path: the tumbling branch of the merged session+tumbling
-        // run — sink and state come off ONE checkpoint (see runPairedOnce)
+        // run — sink and state come off ONE checkpoint (see tumblingRun)
         val run = tumblingRun(spark, sfDir)
         spark.read.schema(run.schema).parquet(run.out)
           .filter(col("kind") === "tumbling")
-      } else runToParquet(spark, minDataBatches = parts) { s =>
+      } else runToParquet(spark, rocksDb = false, minDataBatches = parts) { s =>
         stagedTumblingAgg(s, sfDir, parts)
       }
     base
@@ -557,73 +540,40 @@ object Streaming {
     * `stream_session` (sink, kind='native'), `scan_state_session`
     * (session store), `scan_state_timers` (TWS registered timers),
     * `stream_sliding` (sink, kind='sliding') and `scan_state_sliding`
-    * (sliding store) — one checkpoint, one multi-batch proof (r18 judge
-    * item 4 merged the tumbling trio; r19 item 5 folded the
-    * sessionization union in as two more stateful operators, retiring
-    * that run's own ~5.5 s board floor; the r19 optimization round
-    * folded the sliding pair in as operator 3, retiring its run too). The run follows the snapshot
-    * protocol — the SAME watermarked tumbling agg over THREE
-    * time-contiguous files as TWO sequential AvailableNow legs (2 + 1
-    * data batches, ≥3 total) on one checkpoint, forced RocksDB
-    * maintenance between the legs uploading a full snapshot of the last
-    * leg-1 version — for the snapshot-read operator only; the other two
-    * operators' stores just unload (r19: each forced snapshot zips and
-    * uploads every store instance of its operator for a read nothing
-    * performs) — so leg 2's commits are changelog-only. Emitted set and
-    * open-window state are batch-count-invariant under time-contiguous
-    * staging (the [[streamTumbling]] argument quantifies over ANY
-    * contiguous batching), so neither the leg split nor the r19
-    * 4-file → 3-file trim changes any consumer's rows.
-    * Read 0 = direct latest-state (scan_state_window), read 1 =
-    * per-partition snapshot reconstruction incl partition_id
+    * (sliding store) — one checkpoint, one multi-batch proof. The run
+    * follows the snapshot protocol — the SAME watermarked stateful
+    * operators over THREE time-contiguous files as TWO sequential
+    * AvailableNow legs (2 + 1 data batches, ≥3 total) on one checkpoint,
+    * forced RocksDB maintenance between the legs uploading a full
+    * snapshot of the last leg-1 version — for the snapshot-read operator
+    * only; the other operators' stores just unload (a forced snapshot
+    * zips and uploads every store instance of its operator, for a read
+    * nothing performs) — so leg 2's commits are changelog-only. Emitted
+    * set and open-window state are batch-count-invariant under
+    * time-contiguous staging (the [[streamTumbling]] argument quantifies
+    * over ANY contiguous batching), so the leg split changes no
+    * consumer's rows. Read 0 = direct latest-state (scan_state_window),
+    * read 1 = per-partition snapshot reconstruction incl partition_id
     * (scan_state_snapshot); the reconstruction ≡ direct-read equality —
     * including partition assignment — is REQUIRED in-builder before the
     * checkpoint is deleted, so every board pass still proves the repair
     * path. */
-  private def tumblingRun(spark: SparkSession, sfDir: String): StreamRun = {
-    val key = s"tumbling#$sfDir"
-    val lock = pairLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val cached = pairRuns.get(key)
-      if (cached != null) return cached
-      var tMark = System.nanoTime()
-      def mark(stage: String): Unit = {
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          System.err.println(f"[stream-debug] tumblingRun $stage took " +
-            f"${(System.nanoTime() - tMark) / 1e9}%.2f s")
-        tMark = System.nanoTime()
-      }
-      val pdir = s"$ScratchRoot/$PairsDirName/" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      new java.io.File(pdir).mkdirs(): Unit
-      val nStateParts = 4
-      val child = spark.newSession()
+  private def tumblingRun(spark: SparkSession, sfDir: String): StreamRun =
+    runOnce("tumbling", sfDir) { pdir =>
       // state partition count pinned in-operator (a per-query capacity
-      // decision — the reconstruction enumerates exactly these partitions)
-      child.conf.set("spark.sql.shuffle.partitions", nStateParts.toString)
-      child.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      child.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // metric-only row-count tracking off — see runToParquet
-      child.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-      // capture a local native checkpoint at EVERY commit, so the forced
+      // decision — the reconstruction enumerates exactly these partitions);
+      // a local native checkpoint at EVERY commit, so the forced
       // maintenance between the legs uploads a snapshot of the latest
       // leg-1 version (default 10 would skip short runs entirely)
-      child.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
+      val nStateParts = 4
+      val child = streamChild(spark, rocksDb = true,
+        "spark.sql.shuffle.partitions" -> nStateParts.toString,
+        "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1")
       val schema = child.read.parquet(s"$sfDir/events.parquet").schema
       val stage = scratchDir()
-      // staged layout off the SHARED registry (r20): this run's private
-      // repartitionByRange(3, ts) write was byte-for-byte the stageEvents
-      // recipe (same range split, same sort, same mtime stamps), re-run
-      // once per board — the pinned registry layout is hard-LINKED into
-      // this run's own admit-in-waves dir instead (links share the
-      // already-stamped mtimes; deleting the run's links at sweep leaves
-      // the registry files untouched). Admission order and batch
-      // boundaries are unchanged, so every consumer's rows are too.
+      // the pinned registry layout is hard-LINKED into this run's own
+      // admit-in-waves dir (links share the already-stamped mtimes;
+      // deleting the run's links at sweep leaves the registry files alone)
       val parts = stageEvents(child, sfDir, 3)
       new java.io.File(s"$stage/staged").mkdirs(): Unit
       def admit(f: java.io.File): Unit = Streaming.admit(f, s"$stage/staged")
@@ -632,15 +582,13 @@ object Streaming {
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$stage/staged")
         .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
-      // THREE stateful operators in one query (r19, judge item 5 — the
-      // sessionRun union folded into the two-leg snapshot run): the
-      // tumbling agg, the native session_window agg and the TWS timer
-      // sessionization consume the same staged source; every branch
-      // watermarks the same ts by 10 min, so the global watermark equals
-      // each standalone run's and every consumer's rows are unchanged.
-      // The session branches ride the two-leg protocol harmlessly: their
-      // censuses are batch-count-invariant under time-contiguous staging
-      // (the same quantified argument as the 3-cut → 2×2-cut move, r18).
+      // FOUR stateful operators in one query: the tumbling agg, the native
+      // session_window agg, the TWS timer sessionization and the sliding
+      // agg consume the same staged source; every branch watermarks the
+      // same ts by 10 min, so the global watermark equals each standalone
+      // run's and every consumer's rows are unchanged. All four ride the
+      // two-leg protocol harmlessly: their censuses are
+      // batch-count-invariant under time-contiguous staging.
       val nullWin = lit(null).cast("struct<start:timestamp,end:timestamp>")
       def unionDf = {
         import child.implicits._
@@ -680,11 +628,8 @@ object Streaming {
             date_format(timestamp_micros(col("startUs")), tsFmt).as("first_ts"),
             date_format(timestamp_micros(col("endUs")), tsFmt).as("last_ts"),
             col("n_events"))
-        // sliding branch (r19 optimization round: the sliding pair run
-        // folded in as operator 3 — same watermark, same column set as
-        // the tumbling branch, so the union schema is unchanged; the
-        // emitted/buffered contracts are batch-count-invariant under
-        // time-contiguous staging by the same quantified argument)
+        // same watermark and column set as the tumbling branch, so the
+        // union schema is unchanged
         val sld = srcDf
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
@@ -699,41 +644,29 @@ object Streaming {
         tum.unionByName(nat).unionByName(tws).unionByName(sld)
       }
       val sinkSchema = unionDf.schema
-      def runLeg(minBatches: Int): Unit = {
-        val q = unionDf.writeStream.outputMode("append").format("parquet")
-          .option("path", s"$pdir/out")
-          .option("checkpointLocation", s"$pdir/chk")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        debugProgress("tumblingRun.leg", q)
-        val n = q.recentProgress.count(_.numInputRows > 0)
-        require(n >= minBatches,
-          s"multi-batch contract: expected >= $minBatches data micro-batches, got $n")
-      }
-      mark("staging")
+      def runLeg(minBatches: Int): Unit =
+        runToEnd(unionDf.writeStream.outputMode("append").format("parquet")
+          .option("path", s"$pdir/out"), pdir, minBatches)
       parts.take(2).foreach(admit)
-      // leg 1 skips its trailing no-data micro-batch (r19): that batch
-      // only advances the watermark and flushes the windows it seals,
-      // and leg 2's first batch performs exactly the same advancement
-      // from the persisted offset log — the emitted SET is unchanged
-      // (batch-count-invariance), one 3-operator commit round cheaper.
-      // Leg 2 keeps its finalize batch: the run's LAST watermark
-      // advancement must happen before the state reads.
+      // leg 1 skips its trailing no-data micro-batch: that batch only
+      // advances the watermark and flushes the windows it seals, and leg
+      // 2's first batch performs exactly the same advancement from the
+      // persisted offset log — the emitted SET is unchanged
+      // (batch-count-invariance), one commit round cheaper. Leg 2 keeps
+      // its finalize batch: the run's LAST watermark advancement must
+      // happen before the state reads.
       child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       runLeg(2) // leg 1
       child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      mark("leg1")
-      // forced maintenance uploads the full snapshot zips; then discover
-      // the snapshotted version from the checkpoint itself (no-data
-      // batches commit versions too, so discovery beats arithmetic).
-      // Discovery enumerates EVERY state partition (r15 advice): a
-      // partition whose upload failed must fail HERE with a named
-      // diagnostic, not as an opaque statestore read error.
-      // snapshot only the operator the snapshot-anchored read targets;
-      // the session/TWS operators are merely unloaded (r19 optimization)
+      // forced maintenance uploads the full snapshot zips of the operator
+      // the snapshot-anchored read targets; then discover the snapshotted
+      // version from the checkpoint itself (no-data batches commit
+      // versions too, so discovery beats arithmetic). Discovery enumerates
+      // EVERY state partition: a partition whose upload failed must fail
+      // HERE with a named diagnostic, not as an opaque statestore read
+      // error.
       org.apache.spark.sql.graft.StreamHygiene.maintainAndUnload(
         _ == TumWindowOperatorId.toLong)
-      mark("maintenance")
       def snapVersionsOf(p: Int): Set[Long] = Option(
           new java.io.File(s"$pdir/chk/state/0/$p").listFiles()).toSeq.flatten
         .map(_.getName).filter(_.endsWith(".zip"))
@@ -748,90 +681,67 @@ object Streaming {
           s"all $nStateParts state partitions (per-partition *.zip: $detail)")
       }
       parts.drop(2).foreach(admit)
-      // leg 2 needs NO local native checkpoints (r20): its full snapshot
-      // is already uploaded and its commits are changelog-only BY DESIGN
-      // — with minDeltasForSnapshot still 1, every leg-2 commit also
-      // captured a local RocksDB checkpoint (flush + SST hardlinks × 4
-      // ops × 4 partitions × 2 batches) that nothing ever reads. Leg 2
-      // is a NEW query (its own StateStoreConf snapshot), so raising the
-      // dial here affects only those wasted captures; the persisted
-      // checkpoint content every reader consumes — snapshot zips from
-      // leg 1's maintenance, changelogs from both legs — is unchanged.
+      // leg 2 needs NO local native checkpoints: its full snapshot is
+      // already uploaded and its commits are changelog-only BY DESIGN.
+      // Leg 2 is a NEW query (its own StateStoreConf snapshot), so raising
+      // the dial here only skips captures nothing reads; the persisted
+      // checkpoint content every reader consumes — snapshot zips from leg
+      // 1's maintenance, changelogs from both legs — is unchanged.
       child.conf.set(
         "spark.sql.streaming.stateStore.minDeltasForSnapshot", "1000000")
       runLeg(1) // leg 2: changelog-only commits on top of the snapshot
-      mark("leg2")
       org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-      def readState(opts: Map[String, String],
-                    decode: Seq[org.apache.spark.sql.Column]): DataFrame =
-        opts.foldLeft(
-            child.read.format("statestore").option("path", s"$pdir/chk")) {
-          case (r, (k, v)) => r.option(k, v)
-        }.load().select(decode: _*)
+      def read(opts: (String, String)*)(decode: org.apache.spark.sql.Column*) =
+        stateFrame(child, pdir, StateRead(opts.toMap, decode))
       val winDecode = windowStateCols :+ col("partition_id")
-      // The four state reads are independent jobs over one terminated
-      // checkpoint — submit them from a thread pool so the later reads
-      // back-fill the earlier reads' task tails (guide §2.6) instead of
-      // paying four sequential job floors. Operator ids follow the union
-      // branch order tumbling=0, native session=1, TWS=2 (the tcrec
-      // discipline) — a crossed id fails LOUDLY at decode time: the
-      // three stores share no key/value shape.
-      // read 0: the direct latest-state census (scan_state_window's
-      // consumer projects the window columns; partition_id rides along
-      // for the equality proof and is dropped by the reader).
-      // read 1: the per-partition snapshot+changelog reconstruction.
-      // read 2: the native session store (scan_state_session).
-      // read 3: the TWS branch's registered timers (scan_state_timers).
-      val readJobs: Seq[() => Unit] = Seq(
-        () => readState(Map("operatorId" -> TumWindowOperatorId), winDecode)
+      // The five state reads are independent jobs over one terminated
+      // checkpoint, run concurrently so the later reads back-fill the
+      // earlier reads' task tails. Operator ids follow the union branch
+      // order tumbling=0, native session=1, TWS=2, sliding=3 — a crossed
+      // id fails LOUDLY at decode time: the stores share no key/value
+      // shape.
+      runConcurrently(Seq(
+        // read 0: the direct latest-state census (scan_state_window's
+        // consumer projects the window columns; partition_id rides along
+        // for the equality proof and is dropped by the reader)
+        () => read("operatorId" -> TumWindowOperatorId)(winDecode: _*)
           .write.parquet(s"$pdir/state_out0"),
+        // read 1: the per-partition snapshot+changelog reconstruction
         () => (0 until nStateParts).map { p =>
-          readState(Map(
-            "operatorId" -> TumWindowOperatorId,
+          read("operatorId" -> TumWindowOperatorId,
             "snapshotStartBatchId" -> (snapVersion - 1).toString,
-            "snapshotPartitionId" -> p.toString), winDecode)
+            "snapshotPartitionId" -> p.toString)(winDecode: _*)
         }.reduce(_ union _).write.parquet(s"$pdir/state_out1"),
-        () => readState(Map("operatorId" -> SessAggOperatorId), Seq(
+        // read 2: the native session store (scan_state_session)
+        () => read("operatorId" -> SessAggOperatorId)(
             col("key.user_id").as("user_id"),
             date_format(col("value.min"), tsFmt).as("first_ts"),
             date_format(col("value.max"), tsFmt).as("last_ts"),
-            col("value.count").as("n_events")))
+            col("value.count").as("n_events"))
           .write.parquet(s"$pdir/state_out2"),
-        () => readState(Map("operatorId" -> SessTwsOperatorId,
-            "readRegisteredTimers" -> "true"), Seq(
+        // read 3: the TWS branch's registered timers (scan_state_timers)
+        () => read("operatorId" -> SessTwsOperatorId,
+            "readRegisteredTimers" -> "true")(
             col("key.value").as("user_id"),
-            col("expiration_timestamp_ms").as("timer_ms")))
+            col("expiration_timestamp_ms").as("timer_ms"))
           .write.parquet(s"$pdir/state_out3"),
         // read 4: the sliding branch's open window INSTANCES
         // (scan_state_sliding)
-        () => readState(Map("operatorId" -> SlidingOperatorId),
-            windowStateCols)
-          .write.parquet(s"$pdir/state_out4"))
-      runConcurrently(readJobs)
-      mark("state-reads-x5")
-      org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-      deleteRec(new java.io.File(s"$pdir/chk"))
+        () => read("operatorId" -> SlidingOperatorId)(windowStateCols: _*)
+          .write.parquet(s"$pdir/state_out4")))
+      releaseCheckpoint(pdir)
       // proof frames read on the CHILD session (4 shuffle partitions —
       // the parent's 32 would spread a handful of rows over 32 tasks)
       val recon = child.read.parquet(s"$pdir/state_out1")
       val direct = child.read.parquet(s"$pdir/state_out0")
       // the in-builder proof: reconstruction ≡ direct read, per
-      // partition — one action for both directions (r19: two sequential
-      // exceptAll counts paid two job floors for one tiny symmetric diff)
+      // partition — one action for both directions
       require(recon.exceptAll(direct)
           .unionAll(direct.exceptAll(recon)).isEmpty,
         "snapshot+changelog reconstruction must equal the direct state read")
-      mark("equality-proof")
-      val run = StreamRun(s"$pdir/out",
-        Seq(s"$pdir/state_out0", s"$pdir/state_out1",
-          s"$pdir/state_out2", s"$pdir/state_out3",
-          s"$pdir/state_out4"), sinkSchema)
-      pairOuts.add(run.out): Unit
-      run.states.foreach(s => pairOuts.add(s): Unit)
-      pairRuns.put(key, run)
-      run
+      StreamRun(s"$pdir/out", (0 to 4).map(i => s"$pdir/state_out$i"),
+        sinkSchema)
     }
-  }
 
   /** 1-hour window sliding every 30 minutes (each event in 2 windows),
     * run as a REAL streaming job over ≥3 micro-batches (r14): same
@@ -842,9 +752,8 @@ object Streaming {
     * min`, batch-count-invariant under time-contiguous staging. */
   def streamSliding(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // sliding branch of the merged tumbling run (r19 optimization round:
-    // the sliding pair's own run folded in — sink and state still come
-    // off ONE checkpoint, now shared with the tumbling/session family)
+    // sliding branch of the merged tumbling run: sink and state come off
+    // ONE checkpoint, shared with the tumbling/session family
     val run = tumblingRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "sliding")
@@ -870,7 +779,7 @@ object Streaming {
     * cost of sliding vs tumbling at 100 TB. */
   def scanStateSliding(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // sliding-store read of the merged tumbling run (r19 optimization)
+    // sliding-store read of the merged tumbling run
     val run = tumblingRun(spark, sfDir)
     spark.read.parquet(run.states(4)).orderBy($"win_start", $"event_type")
   }
@@ -900,31 +809,21 @@ object Streaming {
     * O(touched groups). */
   def streamUpdateWindows(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // r20 note: a merge of this run with stream_foreach_upsert (one
-    // update-mode union + foreachBatch routing each slice to its own
-    // sink) measured NEGATIVE in both interleaved legs — the merged run
-    // cost 7.2–10.6 s where the two standalones cost 5.4 s under the
-    // same-period load, because the upsert slice went from one batch to
-    // three versioned upsertStep folds plus a per-batch persist of the
-    // whole union batch, for one saved ~1 s query floor. Reverted
-    // (guide §1); this stays the board's one standalone update-mode run
-    // (output mode is query-level, so no append-mode union can host it).
+    // A merge of this run with stream_foreach_upsert (one update-mode
+    // union + foreachBatch routing each slice to its own sink) measured
+    // slower: the upsert slice went from one batch to three versioned
+    // upsertStep folds plus a per-batch persist of the whole union batch,
+    // for one saved query floor. This stays the board's one standalone
+    // update-mode run (output mode is query-level, so no append-mode
+    // union can host it), on the default HDFS-backed state store.
     val dir = scratchDir()
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
-    val q = stagedTumblingAgg(child, sfDir)
+    val child = streamChild(spark, rocksDb = false)
+    runToEnd(stagedTumblingAgg(child, sfDir)
       .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("append").parquet(s"$dir/out")
-      }.start()
-    q.awaitTermination()
-    require(q.recentProgress.count(_.numInputRows > 0) >= 3,
-      "multi-batch contract: the update stream must run >= 3 data micro-batches")
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    deleteRec(new java.io.File(s"$dir/chk"))
-    liveOuts.add(s"$dir/out"): Unit
+      }, dir, minDataBatches = 3)
+    releaseCheckpoint(dir)
     spark.read.parquet(s"$dir/out")
       .groupBy($"window", $"event_type")
       .agg(max(struct($"n", $"sum_value")).as("s"))
@@ -1170,98 +1069,95 @@ object Streaming {
     staged
   }
 
-  /** Run a streaming frame to a parquet FILE sink and read the result
-    * back as a batch frame. A memory sink would materialize the entire
-    * result on the driver — at 100 TB the deduped event stream is a
-    * driver OOM; the file sink keeps every row executor-side (the
-    * explicit schema covers the zero-finalized-windows read-back).
-    *
-    * The stream is BUILT AND RUN in a child session (`newSession`: shared
-    * SparkContext, isolated SQLConf), so per-query streaming conf — state
-    * partition count, state store provider — never mutates the caller's
-    * session. Set-and-restore on a shared session would race any query
-    * running concurrently on it; conf isolation makes the facade safe.
-    *
-    * State partition sizing: a streaming query fixes its STATE partition
-    * count at first start from spark.sql.shuffle.partitions, and every
-    * stateful operator then pays per-partition store open/commit overhead
-    * each batch. These harness streams are single AvailableNow batches of
-    * ≤100k rows, where 8 state partitions are plenty; a production
-    * deployment sizes this to throughput the same way (state partitioning
-    * is a per-query capacity decision, not a session constant). */
-  /** Streaming-child shuffle/state partition count (r19, judge item 5):
-    * every run here carries tiny per-batch state, and the measured cost
-    * floor is the per-(store × partition × batch) RocksDB commit, not
-    * data parallelism — the 4-join quad run dropped 24 s → 14 s going
-    * 8 → 4 partitions at sf0.1. 4 matches the counts the tumbling and
-    * det-status builders already pin in-operator; at production state
-    * volumes this is the capacity dial you RAISE before the first run
-    * (state partition count is fixed at a query's first checkpoint —
-    * size it to the keyspace, not the fixture). */
+  /** Streaming-child shuffle/state partition count: every run here
+    * carries tiny per-batch state, and the measured cost floor is the
+    * per-(store × partition × batch) RocksDB commit, not data parallelism
+    * — a four-join click→purchase run took 24 s at 8 partitions and 14 s
+    * at 4 (sf0.1). At production state volumes this is the capacity dial you
+    * RAISE before the first run (state partition count is fixed at a
+    * query's first checkpoint — size it to the keyspace, not the
+    * fixture). */
   private def streamStateParts(spark: SparkSession): String =
     math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 4).toString
 
-  private def runToParquet(spark: SparkSession,
-                           extraConf: Map[String, String] = Map.empty,
+  /** The child session a stream run is built and run in (`newSession`:
+    * shared SparkContext, isolated SQLConf), so per-run streaming conf —
+    * state partition count, state store provider — never mutates the
+    * caller's session. Set-and-restore on a shared session would race any
+    * query running concurrently on it.
+    *
+    * `rocksDb` selects the RocksDB state store with changelog
+    * checkpointing: each commit uploads the batch's CHANGED keys instead
+    * of zipping the whole store (snapshots move to background
+    * maintenance). Measured neutral at board level on sf0.1; kept because
+    * it is the scale contract — at 100 TB a keyed store's full snapshot
+    * per micro-batch is O(state), the changelog O(delta), and recovery
+    * replays changelog over the last snapshot (pinned by the StreamingSpec
+    * restart-recovery test). Per-row total-count tracking is off: it costs
+    * a RocksDB get per put purely to feed the numRowsTotal metric, which
+    * nothing reads. `conf` is applied last and overrides any of these. */
+  private def streamChild(spark: SparkSession, rocksDb: Boolean,
+                          conf: (String, String)*): SparkSession = {
+    val child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
+    if (rocksDb) {
+      child.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      child.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      child.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+        "false")
+    }
+    conf.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  /** Run `writer` to completion: start it on the `$dir/chk` checkpoint
+    * with an AvailableNow trigger, wait for it to finish, and check from
+    * its own StreamingQueryProgress — the source of truth — that it ran
+    * at least `minDataBatches` data micro-batches, so a batch≡stream
+    * oracle claim resting on multi-batch staging is load-bearing on every
+    * run. */
+  private def runToEnd(writer: DataStreamWriter[Row], dir: String,
+                       minDataBatches: Int): Unit = {
+    val q = writer.option("checkpointLocation", s"$dir/chk")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val n = q.recentProgress.count(_.numInputRows > 0)
+    require(n >= minDataBatches,
+      s"multi-batch contract: expected >= $minDataBatches data micro-batches, got $n")
+  }
+
+  /** Post-run hygiene (a long session that accumulates finished-query
+    * residue is itself a scale defect): the checkpoint tree is dead
+    * weight once the run has terminated and its state reads are done, and
+    * the JVM-wide provider registry would otherwise hold the run's
+    * in-memory state until the ~60 s maintenance sweep, taxing whatever
+    * runs next. Unload FIRST, delete second: a still-loaded provider's
+    * async maintenance could otherwise write snapshot files back into
+    * `$dir/chk` between the delete and the unload. The run's outputs
+    * beside `chk` survive: callers read them lazily. */
+  private def releaseCheckpoint(dir: String): Unit = {
+    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
+    deleteRec(new java.io.File(s"$dir/chk"))
+  }
+
+  /** Run a streaming frame to a parquet FILE sink on a child session and
+    * read the result back as a batch frame. A memory sink would
+    * materialize the entire result on the driver — at 100 TB the deduped
+    * event stream is a driver OOM; the file sink keeps every row
+    * executor-side (the explicit schema covers the zero-finalized-windows
+    * read-back). */
+  private def runToParquet(spark: SparkSession, rocksDb: Boolean,
                            minDataBatches: Int = 0)
                           (build: SparkSession => DataFrame): DataFrame = {
     val dir = scratchDir()
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
-    // Changelog checkpointing for the RocksDB-backed runs: each commit
-    // uploads the batch's CHANGED keys instead of zipping the whole
-    // store (snapshots move to background maintenance). Measured NEUTRAL
-    // at BOARD level (r13 full-board sf0.1 A/B, same session conditions:
-    // stream family 41.5 s ON vs 49.4 s OFF while the untouched
-    // non-stream board drifted +12.6% in the OFF run — conf-attributable
-    // delta inside the run's own noise, slightly favoring ON), matching
-    // the r12 6-query lane A/B (12.9 vs 13.0 s). Kept because it is the
-    // scale contract that matters: at 100 TB a keyed store's full
-    // snapshot per micro-batch is O(state), the changelog is O(delta),
-    // and recovery replays changelog over the last background snapshot —
-    // now pinned by the StreamingSpec restart-recovery test. HDFS-backed
-    // runs ignore the conf.
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    // Per-row total-count tracking costs a RocksDB get per put purely to
-    // feed the numRowsTotal METRIC (no query reads it; the state content
-    // is unchanged) — the documented knob to turn off first on
-    // write-heavy stores.
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      "false")
-    extraConf.foreach { case (k, v) => child.conf.set(k, v) }
-    val df = build(child)
-    val q = df.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    debugProgress("runToParquet", q)
-    // Multi-batch proof (r12 judge item 3): callers streaming staged
-    // input assert — from StreamingQueryProgress, the source of truth —
-    // that the run REALLY executed that many data micro-batches, so the
-    // batch≡stream oracle claim is load-bearing on every board run.
-    if (minDataBatches > 0) {
-      val n = q.recentProgress.count(_.numInputRows > 0)
-      require(n >= minDataBatches,
-        s"multi-batch contract: expected >= $minDataBatches data micro-batches, got $n")
-    }
-    // Post-run hygiene (the r8 lesson — a long session that accumulates
-    // finished-query residue is itself a scale defect): the checkpoint
-    // tree (offsets/commits/state files, RocksDB working set) is dead
-    // weight once the AvailableNow run has terminated, and the JVM-wide
-    // provider registry would otherwise hold this query's in-memory state
-    // until the ~60 s maintenance sweep — taxing whatever runs next.
-    // The `out` dir must survive: the caller reads it lazily.
-    // Unload FIRST, delete second (r9 advice): a still-loaded provider's
-    // async maintenance sweep could otherwise write snapshot files back
-    // into $dir/chk in the window between the delete and the unload,
-    // resurrecting the residue this cleanup removes.
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    deleteRec(new java.io.File(s"$dir/chk"))
-    liveOuts.add(s"$dir/out"): Unit
+    val df = build(streamChild(spark, rocksDb))
+    runToEnd(df.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$dir/out"), dir, minDataBatches)
+    releaseCheckpoint(dir)
     spark.read.schema(df.schema).parquet(s"$dir/out")
   }
 
@@ -1315,13 +1211,11 @@ object Streaming {
     * key — the standard keyed-state plan. */
   def streamKeyedState(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // flatMapGroupsWithState branch of the shared aux run (r19
-    // optimization): the FMGWS operator — the API this query
-    // demonstrates — runs as operator 2 of the union. Staging moved
-    // sampled → det cuts with the branch: the fold is the commutative
-    // count+latest (the docstring's own argument), so the keep-latest
-    // collapse below is cut-invariant — same final census, oracle
-    // unchanged.
+    // flatMapGroupsWithState branch of the shared aux run: the FMGWS
+    // operator — the API this query demonstrates — runs as operator 2 of
+    // the union, on det cuts. The fold is the commutative count+latest
+    // (the docstring's own argument), so the keep-latest collapse below
+    // is cut-invariant — the same final census as any staging.
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "fmgws")
@@ -1346,11 +1240,10 @@ object Streaming {
     * classify the same CSV and hash-match the error histogram. */
   def streamCsvIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // csv branch of the shared aux run (r20): the stateless
-    // parse/trim/classify is batching-invariant and rides its own file
-    // source inside the union, so the per-row classified set — and the
-    // status rollup below — is identical to the retired standalone run
-    // (see auxUnionStream), one streaming-job floor cheaper.
+    // csv branch of the shared aux run: the stateless parse/trim/classify
+    // is batching-invariant and rides its own file source inside the
+    // union, so the per-row classified set — and the status rollup below
+    // — equals a standalone run's (see auxUnionStream).
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "csv")
@@ -1378,13 +1271,12 @@ object Streaming {
     * oracle is unchanged. */
   def streamJoinStatic(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // stateless enrichment branch of the shared aux run (r19
-    // optimization): the dimension is still genuinely re-broadcast per
-    // micro-batch inside the shared run, and a stateless equi-join's
-    // union of per-batch outputs equals the batch join under ANY
-    // batching — so the sampled → det staging move changes no rows. The
-    // branch emits one row per joined event (value already dec6-cast);
-    // the segment rollup stays batch-side on the read-back, as before.
+    // stateless enrichment branch of the shared aux run: the dimension
+    // is genuinely re-broadcast per micro-batch inside the shared run,
+    // and a stateless equi-join's union of per-batch outputs equals the
+    // batch join under ANY batching. The branch emits one row per joined
+    // event (value already dec6-cast); the segment rollup stays
+    // batch-side on the read-back.
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "static")
@@ -1479,19 +1371,17 @@ object Streaming {
     date_format(col("value.purchase_ts"), tsFmt).as("open_until"))
 
   /** Operator id of the ONE full-outer join operator inside
-    * [[clickPurchaseQuadRun]] (r19 optimization: the run used to carry
-    * FOUR join operators — inner, leftOuter, rightOuter, fullOuter — as a
-    * tagged union; the full-outer operator alone emits a superset every
-    * other type is a null-pattern RESTRICTION of, so the other three were
-    * 3× redundant state-commit churn: 64 → 16 RocksDB instances/batch). */
+    * [[clickPurchaseQuadRun]]: the full-outer operator alone emits a
+    * superset every other join type is a null-pattern RESTRICTION of, so
+    * one operator serves all four types (16 RocksDB instances per batch
+    * where four operators would commit 64). */
   private val CpJoinOperatorId = "0"
 
-  /** The ONE click→purchase run ALL SIX join-family consumers read (r19
-    * judge item 5; r19 optimization: ONE full-outer operator instead of a
-    * four-operator tagged union). The full-outer emitted set is a strict
-    * superset every other join type RESTRICTS by a null pattern — matched
-    * rows emit eagerly in all four types under the identical join
-    * condition, click-side null-extensions are exactly the rows with
+  /** The ONE click→purchase run ALL SIX join-family consumers read: one
+    * full-outer operator. The full-outer emitted set is a strict superset
+    * every other join type RESTRICTS by a null pattern — matched rows
+    * emit eagerly in all four types under the identical join condition,
+    * click-side null-extensions are exactly the rows with
     * `purchase_id IS NULL`, purchase-side null-extensions exactly
     * `click_id IS NULL`, and both expire under the same watermark rule —
     * so `stream_stream_join` filters both-non-null,
@@ -1502,21 +1392,16 @@ object Streaming {
     * a MemoryStream fixture). `scan_state_join` / `scan_state_join_left`
     * read the operator's two buffers by (operatorId, joinSide); the
     * buffered survivor set is JOIN-TYPE-INVARIANT (eviction follows the
-    * match-window bound on both sides regardless of type — the r19 spec
-    * previously pinned the inner and left-outer operators row-for-row
-    * equal), so one store serves both readers. vs the four-operator
-    * union: 16 instead of 64 RocksDB store instances per batch (4
-    * stores/partition × 4 partitions × 1 join), 2 instead of 8 staged-
-    * source reads, and one join's worth of planning — measured 14.5 s →
-    * see OPTIMIZATION_r19.md. The production shape: one ingest pipeline
+    * match-window bound on both sides regardless of type), so one store
+    * serves both readers. The production shape: one ingest pipeline
     * serving several attribution reports off one pass of the source
     * instead of re-running the join per report. */
   private def clickPurchaseQuadRun(spark: SparkSession, sfDir: String): StreamRun =
-    runPairedOnceReads(spark, "cpquad", sfDir, Seq(
-      (Map("operatorId" -> CpJoinOperatorId, "joinSide" -> "left"),
-        cpLeftBufferCols, "statestore"),
-      (Map("operatorId" -> CpJoinOperatorId, "joinSide" -> "right"),
-        cpRightBufferCols, "statestore")),
+    runPaired(spark, "cpquad", sfDir, Seq(
+      StateRead(Map("operatorId" -> CpJoinOperatorId, "joinSide" -> "left"),
+        cpLeftBufferCols),
+      StateRead(Map("operatorId" -> CpJoinOperatorId, "joinSide" -> "right"),
+        cpRightBufferCols)),
       minDataBatches = 3) { session =>
       stagedOuterClickPurchaseJoin(session, sfDir, "fullOuter")
     }
@@ -1629,15 +1514,14 @@ object Streaming {
     * commutative fold, identical output contract to
     * [[streamKeyedState]] so the same SQL oracle pins both APIs.
     * TWS requires the RocksDB state store provider; the conf is set on
-    * the run's own child session only (see [[runToParquet]]) — the
+    * the run's own child session only (see [[streamChild]]) — the
     * caller's session is never mutated. */
   def streamTwsState(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // emitted side of the shared det-status run (r18): sink, state and
-    // the four batch-resolved reads come off ONE checkpoint — the
-    // keep-latest collapse below is batch-count-invariant, so the
-    // deterministic time cuts serve it identically to the retired
-    // sampled-staging run
+    // emitted side of the shared det-status run: sink, state and the
+    // batch-resolved reads come off ONE checkpoint — the keep-latest
+    // collapse below is batch-count-invariant, so the deterministic time
+    // cuts serve it as any staging would
     val run = detStatusRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "status")
@@ -1654,239 +1538,127 @@ object Streaming {
       .orderBy($"user_id")
   }
 
-  /** Shared scaffold of the statestore-reader family (`scan_state_*`):
-    * run the stateful stream to a parquet sink on an isolated child
-    * session (RocksDB provider — the reader's target), then read the
-    * query's OWN checkpoint back via `spark.read.format("statestore")` —
-    * once per `(readOpts, decode)` pair in `reads`, union-appended into
-    * one frame (an operator with several stores, e.g. a join's two
-    * buffers, is read off the SAME checkpoint) — and materialize to
-    * parquet BEFORE the checkpoint is deleted (the state reader scans it
-    * lazily). Callers reshape/sort the returned batch frame. */
-  private def runAndScanStateReads(
-      spark: SparkSession,
-      reads: Seq[(Map[String, String], Seq[org.apache.spark.sql.Column])],
-      extraConf: Map[String, String] = Map.empty,
-      minDataBatches: Int = 0,
-      readFormat: String = "statestore")
-      (build: SparkSession => DataFrame): DataFrame = {
-    val dir = scratchDir()
-    execStreamAndScan(spark, dir,
-      reads.map { case (o, d) => (o, d, readFormat) }, extraConf,
-      minDataBatches)(build)
-    liveOuts.add(s"$dir/state_out"): Unit
-    spark.read.parquet(s"$dir/state_out")
-  }
-
-  /** Core of the run-then-read-state scaffold, shared by
-    * [[runAndScanStateReads]] (state-only consumers) and
-    * [[runPairedOnce]] (pairs that consume sink AND state): run `build`'s
-    * stream to `$dir/out` on an isolated RocksDB child session, assert
-    * the multi-batch contract from the query's own progress, perform each
-    * state `read` off the checkpoint into `$dir/state_out`, then delete
-    * the checkpoint. Returns the sink schema (needed for a
-    * zero-finalized-rows parquet read-back). */
-  private def execStreamAndScan(
-      spark: SparkSession, dir: String,
-      reads: Seq[(Map[String, String], Seq[org.apache.spark.sql.Column], String)],
-      extraConf: Map[String, String],
-      minDataBatches: Int,
-      separateReadDirs: Boolean = false,
-      stampBatches: Boolean = false)
-      (build: SparkSession => DataFrame)
-      : org.apache.spark.sql.types.StructType = {
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
-    child.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // metric-only row-count tracking off — see runToParquet
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      "false")
-    extraConf.foreach { case (k, v) => child.conf.set(k, v) }
-    val df = build(child)
-    // stampBatches: the emission-set transport — each micro-batch's rows
-    // land with a batch_id stamp via foreachBatch, for consumers whose
-    // per-batch emissions are SETS that collapse by last-stamp rather
-    // than keep-latest-by-key (stream_tws_topk's per-batch rank sets; an
-    // at-least-once foreachBatch retry re-appends the SAME stamped rows,
-    // which a max-by-stamp collapse absorbs)
-    val writer = df.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(Trigger.AvailableNow())
-    val q =
-      if (stampBatches)
-        writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$dir/out")
-        }.start()
-      else writer.format("parquet").option("path", s"$dir/out").start()
-    q.awaitTermination()
-    debugProgress("execStreamAndScan", q)
-    if (minDataBatches > 0) {
-      val n = q.recentProgress.count(_.numInputRows > 0)
-      require(n >= minDataBatches,
-        s"multi-batch contract: expected >= $minDataBatches data micro-batches, got $n")
-    }
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    val readJobs = reads.zipWithIndex.map { case ((readOpts, decode, readFormat), i) =>
-      // union-append shape (separateReadDirs=false): several reads of one
-      // operator land in ONE frame (scan_state_join's two buffers);
-      // separate dirs: each read is its own consumer's result (the
-      // shared-run readers, r15)
-      val target = if (separateReadDirs) s"$dir/state_out$i" else s"$dir/state_out"
-      () => {
-        val t0 = System.nanoTime()
-        readOpts.foldLeft(
-            child.read.format(readFormat).option("path", s"$dir/chk")) {
-            case (r, (k, v)) => r.option(k, v)
-          }.load()
-          .select(decode: _*)
-          .write.mode("append").parquet(target)
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          System.err.println(s"[stream-debug] stateRead $i $readOpts took " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    }
-    // separate dirs: independent jobs, overlap them (guide §2.6);
-    // union-append into ONE dir must stay sequential (append races)
-    if (separateReadDirs) runConcurrently(readJobs)
-    else readJobs.foreach(_())
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    deleteRec(new java.io.File(s"$dir/chk"))
-    df.schema
-  }
-
-  /** One streaming run serving BOTH members of an emitted ⊕ buffered
-    * pair (r15, r14 judge item 1): the sink output and the state read(s)
-    * come off the SAME checkpoint, so the completeness proof — emitted
-    * (`stream_*`) ⊕ buffered (`scan_state_*`) partitions the full batch
-    * census — holds within a single run rather than relying on
-    * determinism across two identical runs, and the board pays ONE
-    * streaming-job floor per pair instead of two. `scan_state_join`
-    * pioneered the multiple-reads-off-one-checkpoint shape; this extends
-    * it across query boundaries with a run-once registry keyed on
-    * (pair, sfDir), the [[stagedDirs]] lifecycle. The dirs live under
-    * the pinned `pairs/` subtree because the two members run in
-    * different board families (`scan` vs `stream`) with family-boundary
-    * sweeps in between; [[sweepAllScratch]] reclaims them at pass end. */
+  /** A run whose outputs serve several queries: the sink at `out`, one
+    * parquet dir per state read in `states` (consumers address them by
+    * index), and the sink schema (needed for a zero-finalized-rows
+    * read-back). */
   private final case class StreamRun(out: String, states: Seq[String],
       schema: org.apache.spark.sql.types.StructType) {
-    /** The single-read consumers' state frame (pairs have one read). */
+    /** The first state read's dir, for single-read runs. */
     def state: String = states.head
   }
+
+  /** One read of a run's checkpoint: `format` is `statestore` for state
+    * content or `state-metadata` for the checkpoint catalog, `opts` its
+    * reader options, `decode` the projection of the rows read. */
+  private final case class StateRead(opts: Map[String, String],
+      decode: Seq[org.apache.spark.sql.Column], format: String = "statestore")
+
+  private def stateFrame(child: SparkSession, dir: String,
+                         read: StateRead): DataFrame =
+    read.opts.foldLeft(
+        child.read.format(read.format).option("path", s"$dir/chk")) {
+      case (r, (k, v)) => r.option(k, v)
+    }.load().select(read.decode: _*)
 
   private val PairsDirName = "pairs"
 
   private val pairRuns =
     new java.util.concurrent.ConcurrentHashMap[String, StreamRun]()
 
-  /** Pair-run result dirs handed out as lazy read-back frames — the
-    * pair family's twin of [[liveOuts]] (r15 advice: a caller holding an
-    * unmaterialized pair frame across [[sweepAllScratch]] deserved the
-    * same named lifecycle warning the non-pair outputs get). Drained by
-    * [[resetPairRuns]]. */
-  private val pairOuts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Per-pair build locks: the streaming run takes seconds, and running
-    * it inside `ConcurrentHashMap.computeIfAbsent` would hold the bin
-    * lock for that whole duration (r15 advice: a reentrant or concurrent
-    * pair build risks deadlock / IllegalStateException under the
-    * computeIfAbsent recursive-update contract). The run is computed
-    * under a plain per-pair monitor instead; distinct pairs build
-    * concurrently, one pair never builds twice. */
+  /** Per-run build locks: a run takes seconds, and building it inside
+    * `ConcurrentHashMap.computeIfAbsent` would hold the bin lock for that
+    * whole duration (a reentrant or concurrent build risks deadlock /
+    * IllegalStateException under the computeIfAbsent recursive-update
+    * contract). The run is built under a plain per-run monitor instead;
+    * distinct runs build concurrently, one run never builds twice. */
   private val pairLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def runPairedOnce(spark: SparkSession, pair: String, sfDir: String,
-      reads: Seq[(Map[String, String], Seq[org.apache.spark.sql.Column])],
-      minDataBatches: Int,
-      stampBatches: Boolean = false)
-      (build: SparkSession => DataFrame): StreamRun =
-    runPairedOnceReads(spark, pair, sfDir,
-      reads.map { case (o, d) => (o, d, "statestore") }, minDataBatches,
-      stampBatches = stampBatches)(build)
-
-  /** [[runPairedOnce]] with a per-read source FORMAT: a run's reads can
-    * mix state content (`statestore`) with the checkpoint catalog
-    * (`state-metadata`) — one streaming job serving both a content
-    * consumer and the discovery consumer (r16, judge item 6). */
-  private def runPairedOnceReads(spark: SparkSession, pair: String,
-      sfDir: String,
-      reads: Seq[(Map[String, String], Seq[org.apache.spark.sql.Column], String)],
-      minDataBatches: Int,
-      extraConf: Map[String, String] = Map.empty,
-      stampBatches: Boolean = false)
-      (build: SparkSession => DataFrame): StreamRun = {
-    val key = s"$pair#$sfDir"
-    val lock = pairLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val cached = pairRuns.get(key)
-      if (cached != null) cached
-      else {
+  /** The run-once registry: `build` runs at most once per (name, sfDir)
+    * until [[resetPairRuns]], in a fresh dir under the pinned `pairs/`
+    * subtree, and every later call returns the registered [[StreamRun]].
+    * The sink output and the state reads of one run then serve every
+    * query that reads it — an emitted (`stream_*`) ⊕ buffered
+    * (`scan_state_*`) pair's completeness proof holds within a single
+    * run rather than relying on determinism across two identical runs,
+    * and the board pays ONE streaming-job floor per run instead of one
+    * per query. The dirs live under `pairs/` because a run's readers sit
+    * in different board families (`scan` vs `stream`) with
+    * family-boundary sweeps in between; [[sweepAllScratch]] reclaims them
+    * at pass end. */
+  private def runOnce(name: String, sfDir: String)
+                     (build: String => StreamRun): StreamRun = {
+    val key = s"$name#$sfDir"
+    pairLocks.computeIfAbsent(key, _ => new Object).synchronized {
+      Option(pairRuns.get(key)).getOrElse {
         val dir = s"$ScratchRoot/$PairsDirName/" +
           java.util.UUID.randomUUID.toString.replace("-", "")
-        // changelog ON, matching the trio's previous runToParquet conf —
-        // O(delta) commits are the scale contract (see runToParquet note);
-        // it also powers the shared det-status run's change-feed reads.
-        // Each read lands in its OWN dir: consumers address them by index.
-        val schema = execStreamAndScan(spark, dir, reads,
-          Map("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-            ++ extraConf,
-          minDataBatches, separateReadDirs = true,
-          stampBatches = stampBatches)(build)
-        val run = StreamRun(s"$dir/out", reads.indices.map(i => s"$dir/state_out$i"),
-          if (stampBatches)
-            schema.add("batch_id", org.apache.spark.sql.types.LongType)
-          else schema)
-        pairOuts.add(run.out): Unit
-        run.states.foreach(s => pairOuts.add(s): Unit)
+        new java.io.File(dir).mkdirs(): Unit
+        val run = build(dir)
         pairRuns.put(key, run)
         run
       }
     }
   }
 
-  /** Drop ONLY the pair-run registry and its dirs, with the same named
-    * lifecycle warning [[sweepScratch]] gives lazy non-pair outputs. Used
-    * by the bench alone lane between timings: a pair member's warm number
-    * must re-run the streaming job, not read the cold run's cached
-    * parquet (r15 advice).
+  /** A [[runOnce]] run of `build`'s stream on a RocksDB child session:
+    * run it to `$dir/out`, check the multi-batch contract, perform each
+    * of `reads` off the terminated checkpoint into its own
+    * `$dir/state_out<i>` (concurrently — independent jobs), then release
+    * the checkpoint. The reads materialize before the delete because the
+    * state reader scans the checkpoint lazily.
     *
-    * SINGLE-THREADED BY CONTRACT (r16 advice): reset must not race a
-    * concurrent [[runPairedOnceReads]]. A builder holding a pre-reset
-    * per-pair lock could finish its run AFTER this sweep cleared the maps
-    * and deleted `pairs/`, registering a StreamRun whose dir no longer
-    * exists. Every current caller (the bench shared pass / alone lane,
-    * Verify, sweepAllScratch) runs queries strictly sequentially, so no
-    * such builder can be in flight; a future concurrent driver must
-    * quiesce pair builds (e.g. synchronize on every live [[pairLocks]]
-    * monitor) before calling this. */
+    * `stampBatches` is the emission-set transport: each micro-batch's
+    * rows land with a `batch_id` stamp via foreachBatch, for consumers
+    * whose per-batch emissions are SETS that collapse by last stamp
+    * rather than keep-latest-by-key (`stream_tws_topk`'s per-batch rank
+    * sets; an at-least-once foreachBatch retry re-appends the SAME
+    * stamped rows, which a max-by-stamp collapse absorbs). */
+  private def runPaired(spark: SparkSession, name: String, sfDir: String,
+      reads: Seq[StateRead], minDataBatches: Int,
+      conf: Seq[(String, String)] = Nil, stampBatches: Boolean = false)
+      (build: SparkSession => DataFrame): StreamRun =
+    runOnce(name, sfDir) { dir =>
+      val child = streamChild(spark, rocksDb = true, conf: _*)
+      val df = build(child)
+      val writer = df.writeStream.outputMode("append")
+      runToEnd(
+        if (stampBatches)
+          writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(s"$dir/out")
+          }
+        else writer.format("parquet").option("path", s"$dir/out"),
+        dir, minDataBatches)
+      org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
+      runConcurrently(reads.zipWithIndex.map { case (read, i) =>
+        () => stateFrame(child, dir, read).write.parquet(s"$dir/state_out$i")
+      })
+      releaseCheckpoint(dir)
+      StreamRun(s"$dir/out", reads.indices.map(i => s"$dir/state_out$i"),
+        if (stampBatches)
+          df.schema.add("batch_id", org.apache.spark.sql.types.LongType)
+        else df.schema)
+    }
+
+  /** Drop the run-once registry and its dirs. Used by the bench alone
+    * lane between timings: a shared run's warm number must re-run the
+    * streaming job, not read the cold run's cached parquet.
+    *
+    * SINGLE-THREADED BY CONTRACT: reset must not race a concurrent
+    * [[runOnce]]. A build holding a pre-reset lock could finish its run
+    * AFTER this cleared the maps and deleted `pairs/`, registering a
+    * StreamRun whose dir no longer exists. Every current caller (the
+    * bench shared pass / alone lane, Verify, sweepAllScratch) runs
+    * queries strictly sequentially, so no such build can be in flight;
+    * a concurrent driver must quiesce builds (e.g. synchronize on every
+    * live [[pairLocks]] monitor) before calling this. */
   def resetPairRuns(): Unit = {
     pairRuns.clear()
     pairLocks.clear()
-    if (!pairOuts.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      val sample = pairOuts.asScala.take(3).mkString(", ")
-      System.err.println(
-        s"Streaming.resetPairRuns: invalidating ${pairOuts.size} lazy " +
-          s"pair-run result dir(s) ($sample ...) - any frame still " +
-          "reading one of these is now a missing-path error")
-      pairOuts.clear()
-    }
     deleteRec(new java.io.File(s"$ScratchRoot/$PairsDirName"))
   }
-
-  /** Single-read [[runAndScanStateReads]] — the common shape. */
-  private def runAndScanState(spark: SparkSession,
-                              readOpts: Map[String, String],
-                              decode: Seq[org.apache.spark.sql.Column],
-                              extraConf: Map[String, String] = Map.empty,
-                              minDataBatches: Int = 0)
-                             (build: SparkSession => DataFrame): DataFrame =
-    runAndScanStateReads(spark, Seq((readOpts, decode)), extraConf,
-      minDataBatches)(build)
 
   /** Operational state AUDIT via Spark's state-store DATA SOURCE (r12):
     * runs the [[StatusProcessor]] status store as a real streaming job,
@@ -1993,10 +1765,8 @@ object Streaming {
     status.unionByName(tc).unionByName(rec)
   }
 
-  /** SIX standalone streaming runs folded into ONE shared union run
-    * (r19 optimization round — the det-trio pattern applied to the
-    * remaining run-per-query singles; r20 added the stateless CSV ingest
-    * branch): the greedy quota fold, the TTL'd status store, the
+  /** SIX streaming queries as ONE shared union run (the det-trio
+    * pattern applied to the run-per-query singles): the greedy quota fold, the TTL'd status store, the
     * flatMapGroupsWithState status twin, the batch-bootstrapped init
     * store, the stream-static enrichment join and the CSV
     * parse/trim/classify run as one append-mode union query. This is a SEPARATE run
@@ -2004,18 +1774,18 @@ object Streaming {
     * that run's catalog literally (three operators), and no state
     * reader targets these five — their checkpoint needs no catalog
     * surface, so the det run's declared shape stays untouched. Every
-    * consumer's result is unchanged:
+    * consumer's result equals its standalone run's:
     *  - quota keeps its det cuts verbatim (the order-sensitive fold's own
-    *    staging contract) — per-batch emissions are identical to the
-    *    retired standalone run;
+    *    staging contract) — per-batch emissions are identical to a
+    *    standalone run's;
     *  - the TTL'd store and the FMGWS twin fold commutative count+latest,
     *    so their keep-latest collapse (n strictly grows per key per
     *    emission ⇒ max(struct) = final census) is CUT-INVARIANT — the
-    *    same argument that moved typeCount/recent onto det cuts in r19;
+    *    same argument that puts typeCount/recent on det cuts;
     *  - the init branch keeps its OWN source verbatim (the post-midpoint
     *    slice staged into 3 files of its own): file sources advance
     *    independently — each trigger takes the next file from EACH
-    *    source — so its per-batch emissions are identical to the retired
+    *    source — so its per-batch emissions are identical to a
     *    standalone run's;
     *  - the stream-static equi-join is STATELESS: the union of per-batch
     *    join outputs equals the batch join under any batching, and the
@@ -2140,15 +1910,15 @@ object Streaming {
         padQuota ++ padStatus ++
         Seq(col("c_mktsegment").as("segment"), dec6(col("value")).as("value")) ++
         padCsv: _*)
-    // streaming CSV ingest (r20 — the sixth branch): STATELESS per-row
+    // streaming CSV ingest (the sixth branch): STATELESS per-row
     // parse/trim/classify over its OWN watched CSV source, so it is
     // batching-invariant (union of per-batch classified rows = the batch
     // classification under any batching) and — file sources in a union
     // advancing independently — its single file lands whole in batch 0
-    // with per-row results identical to the retired standalone run. No
+    // with per-row results identical to a standalone run's. No
     // watermark, no state: it cannot perturb any other branch, and the
-    // shared run's exactly-once parquet sink (unchanged) keeps the
-    // count-shaped read-back collapse retry-safe exactly as before.
+    // shared run's exactly-once parquet sink keeps the count-shaped
+    // read-back collapse retry-safe.
     val csvSchema = org.apache.spark.sql.types.StructType(
       Seq("externalId", "name", "quantity", "expiryDate")
         .map(org.apache.spark.sql.types.StructField(_,
@@ -2177,20 +1947,14 @@ object Streaming {
   }
 
   /** The shared aux run ([[auxUnionStream]]): sink-only — no state reads,
-    * no catalog surface — registered under the pair-run registry so
+    * no catalog surface — registered with [[runOnce]] so
     * `stream_quota_reset` / `stream_tws_ttl` / `stream_keyed_state` /
-    * `stream_tws_init` / `stream_join_static` / `stream_csv_ingest` (r20)
-    * pay ONE streaming-job floor between them. */
+    * `stream_tws_init` / `stream_join_static` / `stream_csv_ingest` pay
+    * ONE streaming-job floor between them. No reader targets its state
+    * partitions, so it keeps the [[streamStateParts]] sizing. */
   private def auxUnionRun(spark: SparkSession, sfDir: String): StreamRun =
-    runPairedOnceReads(spark, "auxunion", sfDir, Seq.empty,
-      minDataBatches = 3,
-      extraConf = Map(
-        // the shared capacity dial, not a hardcoded 4 (r20, r19 advice
-        // item 4): no reader targets this run's state partitions, so it
-        // follows the same streamStateParts sizing every other run uses
-        // and scales down with the parent session on low-core hosts
-        "spark.sql.shuffle.partitions" -> streamStateParts(spark),
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(
+    runPaired(spark, "auxunion", sfDir, Seq.empty, minDataBatches = 3,
+      conf = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(
       child => auxUnionStream(child, sfDir))
 
   /** The statestore reader over LIST state (r13) — with [[scanStateStore]]
@@ -2276,7 +2040,7 @@ object Streaming {
     * item 2): runs the ≥3-micro-batch click→purchase attribution join
     * ([[stagedOuterClickPurchaseJoin]]), then reads BOTH join buffers back
     * from the query's own checkpoint — `joinSide = "left"/"right"`, two
-    * reads off the same checkpoint union-appended by the scaffold. The
+    * reads off the same checkpoint, one state dir each. The
     * join buffer is the state an operator debugs most (is a key's click
     * stuck waiting? how big is each side really?), and it is precisely
     * what the sink can never show: the rows whose match window the final
@@ -2405,8 +2169,8 @@ object Streaming {
     * i.e. the kept rows) and `scan_state_dedup` (the surviving store
     * entries) both read — one checkpoint, one multi-batch proof. */
   private def dedupRun(spark: SparkSession, sfDir: String): StreamRun =
-    runPairedOnce(spark, "dedup", sfDir,
-      Seq((Map.empty[String, String], Seq(
+    runPaired(spark, "dedup", sfDir,
+      Seq(StateRead(Map.empty, Seq(
         col("key.event_id").as("event_id"),
         date_format(timestamp_micros(col("value.expiresAtMicros")), tsFmt)
           .as("expires_at")))),
@@ -2487,52 +2251,46 @@ object Streaming {
     col("maxBatchId").as("max_batch_id"))
 
   /** The ONE deterministic-cut status run the batch-RESOLVED readers AND
-    * the plain status consumers share (r15 — the runPairedOnce registry
-    * generalized to multi-read runs; r16 — the catalog read joins them,
-    * judge item 6; r18 — `stream_tws_state`/`scan_state_store` fold in
-    * too, judge item 4, retiring their separate sampled-staging run):
-    * `scan_state_changes` (full feed from 0), `scan_state_feed_bounded`
-    * (batch 1's window only), `scan_state_asof` (batch-0 time travel),
-    * `scan_state_meta` (the `state-metadata` discovery catalog),
-    * `scan_state_store` (latest-state census) and `stream_tws_state`
-    * (the emitted sink) are six CONSUMERS of the same checkpoint. The
-    * two r18 arrivals are batch-count-INVARIANT contracts (keep-latest
-    * collapse / final-fold census), so deterministic time cuts serve
-    * them exactly as the sampled cuts did — one streaming-job floor
-    * fewer per board pass; r19 (judge item 5) folded the two collection
-    * processors in as operators 1/2 ([[detTrioStream]]), retiring the
-    * separate tcrec run and bringing the consumer count to TEN. State
-    * partition count is PINNED to 4 and no-data batches OFF
-    * in-operator, so the catalog rows — and the batch range 0..2 the
-    * feed/asof reads address — are a pure function of the query shape,
-    * not of the session or engine defaults.
+    * the plain consumers share: `scan_state_changes` (full feed from 0),
+    * `scan_state_feed_bounded` (batch 1's window only), `scan_state_asof`
+    * (batch-0 time travel), `scan_state_meta` (the `state-metadata`
+    * discovery catalog), `scan_state_store` (latest-state census),
+    * `scan_state_map` / `scan_state_list` (collection entries) and
+    * `stream_tws_state` / `stream_tws_mapstate` / `stream_tws_topk` (the
+    * emitted sink) are TEN consumers of the same checkpoint. The
+    * status processor is operator 0 and the two collection processors
+    * operators 1/2 ([[detTrioStream]]). The keep-latest collapses and
+    * final-fold censuses are batch-count-INVARIANT, so the deterministic
+    * time cuts serve them exactly as sampled cuts would. State partition
+    * count is PINNED to 4 and no-data batches OFF in-operator, so the
+    * catalog rows — and the batch range 0..2 the feed/asof reads address
+    * — are a pure function of the query shape, not of the session or
+    * engine defaults.
     * Read 0 = full feed, read 1 = bounded feed, read 2 = batch-0
     * census, read 3 = catalog, read 4 = latest-state census, read 5 =
     * flattened map entries, read 6 = flattened list entries. */
   private def detStatusRun(spark: SparkSession, sfDir: String): StreamRun =
-    runPairedOnceReads(spark, "detstatus", sfDir, Seq(
-      (Map("stateVarName" -> "job", "readChangeFeed" -> "true",
-        "changeStartBatchId" -> "0"), feedCols, "statestore"),
-      (Map("stateVarName" -> "job", "readChangeFeed" -> "true",
-        "changeStartBatchId" -> "1", "changeEndBatchId" -> "1"), feedCols,
-        "statestore"),
-      (Map("stateVarName" -> "job", "batchId" -> "0"), statusCensusCols,
-        "statestore"),
-      (Map.empty[String, String], metaCols, "state-metadata"),
-      (Map("stateVarName" -> "job"), statusCensusCols, "statestore"),
-      (Map("operatorId" -> TcOperatorId, "stateVarName" -> "bytype",
+    runPaired(spark, "detstatus", sfDir, Seq(
+      StateRead(Map("stateVarName" -> "job", "readChangeFeed" -> "true",
+        "changeStartBatchId" -> "0"), feedCols),
+      StateRead(Map("stateVarName" -> "job", "readChangeFeed" -> "true",
+        "changeStartBatchId" -> "1", "changeEndBatchId" -> "1"), feedCols),
+      StateRead(Map("stateVarName" -> "job", "batchId" -> "0"), statusCensusCols),
+      StateRead(Map.empty, metaCols, "state-metadata"),
+      StateRead(Map("stateVarName" -> "job"), statusCensusCols),
+      StateRead(Map("operatorId" -> TcOperatorId, "stateVarName" -> "bytype",
         "flattenCollectionTypes" -> "true"),
         Seq(col("key.value").as("user_id"),
           col("user_map_key.value").as("event_type"),
-          col("user_map_value.value").as("n")), "statestore"),
-      (Map("operatorId" -> RecOperatorId, "stateVarName" -> "recent",
+          col("user_map_value.value").as("n"))),
+      StateRead(Map("operatorId" -> RecOperatorId, "stateVarName" -> "recent",
         "flattenCollectionTypes" -> "true"),
         Seq(col("key.value").as("user_id"),
           col("list_element.event_id").as("event_id"),
           col("list_element.us").as("us"),
-          col("list_element.event_type").as("event_type")), "statestore")),
+          col("list_element.event_type").as("event_type")))),
       minDataBatches = 3,
-      extraConf = Map(
+      conf = Seq(
         "spark.sql.shuffle.partitions" -> "4",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
       stampBatches = true)(
@@ -2639,12 +2397,10 @@ object Streaming {
     * (see [[TtlStatusProcessor]]). */
   def streamTwsTtl(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // TTL branch of the shared aux run (r19 optimization; the run pins
-    // no-data micro-batches OFF for this branch's ProcessingTime mode —
-    // see auxQuadStream). Staging moved sampled → det cuts with the
-    // branch: the fold is commutative count+latest, so the keep-latest
-    // collapse below is cut-invariant — same final census, oracle
-    // unchanged.
+    // TTL branch of the shared aux run (the run pins no-data
+    // micro-batches OFF for this branch's ProcessingTime mode — see
+    // auxUnionStream), on det cuts: the fold is commutative
+    // count+latest, so the keep-latest collapse below is cut-invariant.
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "ttl")
@@ -2675,10 +2431,10 @@ object Streaming {
     * the per-batch snapshots recovers the final census. */
   def streamTwsInit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // init branch of the shared aux run (r19 optimization): the branch
-    // keeps its OWN post-midpoint staged source and batch bootstrap
-    // verbatim — file sources in a union advance independently, so its
-    // per-batch emissions are identical to the retired standalone run
+    // init branch of the shared aux run: the branch keeps its OWN
+    // post-midpoint staged source and batch bootstrap — file sources in a
+    // union advance independently, so its per-batch emissions are
+    // identical to a standalone run's
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "init")
@@ -2729,9 +2485,7 @@ object Streaming {
   def streamTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    runToParquet(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { session =>
+    runToParquet(spark, rocksDb = true) { session =>
       import session.implicits._
       eventsStream(session, sfDir)
         .withWatermark("ts", "10 minutes")
@@ -2758,7 +2512,7 @@ object Streaming {
     * item 1): each batch a key is touched emits that key's CURRENT top-3
     * — a per-batch rank SET, not keep-latest-by-key rows — so the
     * emissions go through the batch-id-stamped foreachBatch transport
-    * (the pair scaffold's `stampBatches`) and collapse per (user, rank) to the
+    * ([[runPaired]]'s `stampBatches`) and collapse per (user, rank) to the
     * key's LAST emission (top-k maintenance is order-insensitive and the
     * carried list only ever improves, so a key's last emission is its
     * global top-3) — the rank-window SQL the oracle runs, now proven
@@ -2798,11 +2552,9 @@ object Streaming {
     * batch/stream parity proof the incremental-ingest story needs. */
   def streamQuotaReset(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // quota branch of the shared aux run (r19 optimization): the branch
-    // is the retired standalone run verbatim — same det-cut staging
-    // (this order-sensitive fold's own contract), same processor, same
-    // per-batch emissions — now rows tagged kind='quota' in the shared
-    // union sink
+    // quota branch of the shared aux run: det-cut staging (this
+    // order-sensitive fold's own contract), rows tagged kind='quota' in
+    // the shared union sink
     val run = auxUnionRun(spark, sfDir)
     spark.read.schema(run.schema).parquet(run.out)
       .filter($"kind" === "quota")
@@ -2813,27 +2565,6 @@ object Streaming {
       .orderBy($"user_id")
   }
 
-  /** Streaming CDC upsert via foreachBatch — the keep-a-table-current
-    * pattern when the sink is a plain file store with no MERGE: each
-    * micro-batch folds into a VERSIONED state snapshot (latest event per
-    * user by (µs, event_id), ties impossible — event_id unique). Writing
-    * state_v<batchId> derived only from state_v<batchId-1> + the batch
-    * makes replays idempotent — foreachBatch is at-least-once, and
-    * batch-id-addressed outputs are the standard exactly-once upgrade.
-    * One AvailableNow batch ⇒ final state ≡ batch latest-per-key, which
-    * is the SQL the oracle runs.
-    *
-    * State lineage is ADDRESSED BY BATCH ID, not by in-memory state: each
-    * batch reads the newest `state_v<b>` with b < batchId from the store
-    * itself, so a replayed batch (foreachBatch is at-least-once) or a
-    * restarted driver re-derives the same snapshot — no @volatile
-    * last-path var that a crash would lose. A source that yields zero
-    * batches returns an empty frame with the output schema.
-    *
-    * Scale: the merge is one union + keyed window per batch — state and
-    * batch shuffle once on the key; snapshots would be partitioned/
-    * bucketed by the key in production so the window never re-sorts the
-    * whole table. */
   /** Versioned snapshots under `dir`, oldest first. */
   private[graft] def stateVersionsIn(dir: String): Seq[(Long, java.io.File)] =
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
@@ -2864,33 +2595,46 @@ object Streaming {
       .write.mode("overwrite").parquet(s"$dir/state_v$batchId")
   }
 
+  /** Streaming CDC upsert via foreachBatch — the keep-a-table-current
+    * pattern when the sink is a plain file store with no MERGE: each
+    * micro-batch folds into a VERSIONED state snapshot (latest event per
+    * user by (µs, event_id), ties impossible — event_id unique). Writing
+    * state_v<batchId> derived only from state_v<batchId-1> + the batch
+    * makes replays idempotent — foreachBatch is at-least-once, and
+    * batch-id-addressed outputs are the standard exactly-once upgrade.
+    * One AvailableNow batch ⇒ final state ≡ batch latest-per-key, which
+    * is the SQL the oracle runs.
+    *
+    * State lineage is ADDRESSED BY BATCH ID, not by in-memory state: each
+    * batch reads the newest `state_v<b>` with b < batchId from the store
+    * itself, so a replayed batch (foreachBatch is at-least-once) or a
+    * restarted driver re-derives the same snapshot — no @volatile
+    * last-path var that a crash would lose. A source that yields zero
+    * batches returns an empty frame with the output schema.
+    *
+    * Scale: the merge is one union + keyed window per batch — state and
+    * batch shuffle once on the key; snapshots would be partitioned/
+    * bucketed by the key in production so the window never re-sorts the
+    * whole table. */
   def streamForeachUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = scratchDir()
     val src = eventsStream(spark, sfDir)
       .select($"user_id", $"event_id", unix_micros($"ts").as("us"),
         $"event_type", $"value")
-    def stateVersions(): Seq[(Long, java.io.File)] = stateVersionsIn(dir)
-    val q = src.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(Trigger.AvailableNow())
+    // on the caller's session, not a child: a newSession() child lacks
+    // graft's extensions, which would change the upsert plan
+    runToEnd(src.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         upsertStep(spark, dir, batch, batchId)
-      }.start()
-    q.awaitTermination()
-    // same post-run hygiene as runToParquet (unload before delete, so no
-    // maintenance sweep re-creates chk); state_v* snapshots survive
-    // (the read below is lazy), only the dead checkpoint tree goes
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    deleteRec(new java.io.File(s"$dir/chk"))
-    stateVersions().lastOption.foreach { case (_, f) =>
-      liveOuts.add(f.getPath): Unit
-    }
-    val latest = stateVersions().lastOption
+      }, dir, minDataBatches = 0)
+    // state_v* snapshots survive (the read below is lazy)
+    releaseCheckpoint(dir)
+    val latest = stateVersionsIn(dir).lastOption
       .map { case (_, f) => spark.read.parquet(f.getPath) }
       // zero batches: empty BATCH frame with the same schema
       .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], src.schema))
+        spark.sparkContext.emptyRDD[Row], src.schema))
     latest
       .select($"user_id", $"event_id",
         date_format(timestamp_micros($"us"), tsFmt).as("last_ts"),
@@ -2940,38 +2684,26 @@ object Streaming {
     * is the stop/upgrade/resume operational path of a 100 TB streaming
     * deployment (deploys happen mid-stream; state must not).
     *
-    * Own staging (files move into the watched dir between runs) rather
-    * than the shared [[stagedDirs]] layout, which other queries read
-    * concurrently within the family. */
+    * Own watched dir (the shared [[stagedDirs]] layout's files are
+    * admitted into it between the legs) rather than the shared layout's
+    * dir itself, which other queries read concurrently within the
+    * family. */
   def streamResume(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     val dir = scratchDir()
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
-    child.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    // Per-row total-count tracking costs a RocksDB get per put purely to
-    // feed the numRowsTotal METRIC (no query reads it; the state content
-    // is unchanged) — the documented knob to turn off first on
-    // write-heavy stores.
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      "false")
+    val child = streamChild(spark, rocksDb = true)
     val path = s"$sfDir/events.parquet"
     val schema = child.read.parquet(path).schema
     // staged layout off the shared pinned registry, hard-linked into this
-    // run's own watched dir (r20 — the tumblingRun recipe; the r19
-    // reuse experiment was neutral only because the registry was swept
-    // per family then, so resume still paid the populating pass): the
-    // move-in-waves admission and batch boundaries are unchanged.
+    // run's own watched dir: the move-in-waves admission and batch
+    // boundaries are those of the staged layout.
     val parts = stageEvents(child, sfDir, 3)
     new java.io.File(s"$dir/staged").mkdirs(): Unit
     def admit(f: java.io.File): Unit = Streaming.admit(f, s"$dir/staged")
-    def run(): Unit = {
+    // each leg is a NEW query over the same checkpoint, and must process
+    // at least one data batch
+    def runLeg(): Unit = {
       import child.implicits._
       val out = child.readStream.schema(schema)
         .option("pathGlobFilter", "part-*")
@@ -2986,24 +2718,17 @@ object Streaming {
           OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[JobUpdate])
         .toDF()
-      val q = out.writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      require(q.recentProgress.exists(_.numInputRows > 0),
-        "each leg of the resume must process at least one data batch")
+      runToEnd(out.writeStream.outputMode("append").format("parquet")
+        .option("path", s"$dir/out"), dir, minDataBatches = 1)
     }
     admit(parts.head)
-    run() // leg 1: first time-range only; state committed to the checkpoint
+    runLeg() // leg 1: first time-range only; state committed to the checkpoint
     // "driver loss": drop every in-memory provider — leg 2 can only
     // recover from the checkpoint (changelog replay over the snapshot)
     org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
     parts.drop(1).foreach(admit)
-    run() // leg 2: NEW query, same checkpoint — the fold must CONTINUE
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    deleteRec(new java.io.File(s"$dir/chk"))
-    liveOuts.add(s"$dir/out"): Unit
+    runLeg() // leg 2: NEW query, same checkpoint — the fold must CONTINUE
+    releaseCheckpoint(dir)
     spark.read.parquet(s"$dir/out")
       // keep-latest collapse across both legs (n strictly grows per key)
       .groupBy($"user_id")

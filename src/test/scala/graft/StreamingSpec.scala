@@ -1605,4 +1605,51 @@ class StreamingSpec extends SparkSuite {
       rm(local); rm(into)
     }
   }
+
+  test("a shared run is built once per pass, again after a reset, and the closing sweep takes it") {
+    val root = new java.io.File(Streaming.ScratchRoot)
+    def pairDirs(): Set[String] =
+      Option(new java.io.File(root, "pairs").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(_.getName).toSet
+    Streaming.resetPairRuns()
+    assert(pairDirs().isEmpty)
+    // both members of the dedup pair read one run
+    Streaming.scanStateDedup(spark, sfDir).collect()
+    Streaming.streamDedupState(spark, sfDir).collect()
+    val first = pairDirs()
+    assert(first.size == 1, s"one run for the pair, got $first")
+    Streaming.streamDedupState(spark, sfDir).collect()
+    Streaming.scanStateDedup(spark, sfDir).collect()
+    assert(pairDirs() == first, "a repeat call must reuse the registered run")
+    Streaming.resetPairRuns()
+    Streaming.streamDedupState(spark, sfDir).collect()
+    val rebuilt = pairDirs()
+    assert(rebuilt.size == 1 && rebuilt != first, s"reset must force one new run, got $rebuilt")
+    Streaming.sweepAllScratch()
+    assert(!new java.io.File(root, "pairs").exists())
+    assert(!new java.io.File(root, "staged-inputs").exists())
+  }
+
+  test("concurrent jobs: the first failure is logged while a sibling still runs, then rethrown") {
+    val boom = new IllegalStateException("state read 1 failed")
+    val log = new java.io.ByteArrayOutputStream()
+    def logged = log.toString("UTF-8").contains(boom.getMessage)
+    // the slow sibling waits (bounded) for the failure to be logged and
+    // records whether it saw the line before it ended
+    @volatile var seenBeforeEnd = false
+    val slow = () => {
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (!logged && System.nanoTime() < deadline) Thread.sleep(20)
+      seenBeforeEnd = logged
+    }
+    val err = System.err
+    System.setErr(new java.io.PrintStream(log, true, "UTF-8"))
+    val thrown =
+      try intercept[IllegalStateException](
+        Streaming.runConcurrently(Seq(() => throw boom, slow)))
+      finally System.setErr(err)
+    assert(seenBeforeEnd, "the failure must be logged before the slow sibling ends")
+    assert(thrown eq boom, "the first failure itself must be rethrown")
+    assert(thrown.getSuppressed.isEmpty, "the sibling settled within the bound")
+  }
 }
