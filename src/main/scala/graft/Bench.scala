@@ -1,46 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Untimed streaming bring-up: the micro-batch engine, parquet sink
-    * commit protocol and state-store machinery cost ~20 s the FIRST time
-    * any streaming query runs in a JVM (class loading, codegen, sink/
-    * checkpoint scaffolding) — r9 measured stream_stream_join at 23.8 s
-    * cold vs 3.4 s warm, almost all of it session bring-up rather than
-    * the join. One throwaway AvailableNow window-agg over 50 rows moves
-    * that bill into the untimed preamble of the shared pass AND of each
-    * alone-lane session that times a stream query. */
-  private def streamWarmup(spark: SparkSession, sfDir: String): Unit = try {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-warm").toString
-    val src = Tables.events(spark, sfDir).limit(50)
-    src.write.mode("overwrite").parquet(s"$dir/in")
-    // RocksDB provider + changelog, matching the conf every graft
-    // streaming run uses (r19): the HDFS-backed warmup left the FIRST
-    // RocksDB run in the board paying native-library init, store-instance
-    // scaffolding and the changelog writer codepath inside its timed
-    // region — the det-status run's batch-0 commitMs measured 7.2 s
-    // shared-pass vs 2.0 s warm, same code.
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", "4")
-    child.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    child.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    val q = child.readStream.schema(src.schema).parquet(s"$dir/in")
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour")).count()
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
-  } catch { case _: Throwable => () }
-
   /** The stdout summary contract, factored out so BenchSpec can pin its
     * size: the harness keeps only the LAST ~2000 chars of run output,
     * and sbt appends a trailing success banner, so this line must stay
@@ -101,18 +60,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftExtensions.install(spark)
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.local(cpus)
     // Untimed JIT/codegen warmup over tiny slices of each execution family
     // (scan+join+agg, window, lambda HOFs over text, native vector math) so
     // whichever query runs first doesn't absorb JVM warmup. The measured
@@ -145,7 +94,7 @@ object Bench {
     // streaming bring-up is worth ~20 s — pay it only when the selection
     // actually times a stream query (a dev subset usually doesn't)
     if (selected.keys.exists(_.startsWith("stream")))
-      streamWarmup(spark, sfDir)
+      ops.Streaming.warmup(spark, sfDir)
     // Deterministic execution order: Map iteration order is arbitrary and
     // reorders which query pays residual warmup — sort for run-to-run
     // comparability.
@@ -236,20 +185,11 @@ object Bench {
     val loadAloneStart = loadavg()
     val jifAloneStart = cpuJiffies()
     val alone = heavy.flatMap { name => try {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = GraftSession.local(cpus)
       try {
         // streaming bring-up is untimed here too: the lane's cold number
         // should measure the query, not first-ever-micro-batch scaffolding
-        if (name.startsWith("stream")) streamWarmup(s, sfDir)
+        if (name.startsWith("stream")) ops.Streaming.warmup(s, sfDir)
         val fn = SparkEntry.queries(name)
         // the same double-GC settle the shared pass gets, before EACH
         // timing: the cold run's cleanup backlog (shuffle files, dead

@@ -573,18 +573,7 @@ object FuzzVerify {
       java.lang.Long.toUnsignedString(new scala.util.Random().nextLong(), 36))
     val n = sys.env.getOrElse("GRAFT_FUZZ_N", "4000").toInt
     System.err.println(s"[fuzz] corpus seed=$seed n=$n — replay with GRAFT_FUZZ_SEED=$seed")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftExtensions.install(spark)
+    val spark = GraftSession.local(GraftSession.cpus())
     run(spark, seed, n, outDir)
     println(s"""{"metric":"fuzz","seed":"$seed","n":$n,"out":"$outDir"}""")
     spark.stop()

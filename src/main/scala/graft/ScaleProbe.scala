@@ -83,17 +83,15 @@ object ScaleProbe {
     // one real streaming join: 10× keyed state, fixed time axis
     "stream_stream_join")
 
-  /** Probe-only wrappers: the board query built with
+  /** Probe-only wrappers: the board query built on a child session with
     * `spark.graft.pairs.maxPerId` set — the dial is read at BUILD time,
-    * so setting it around construction embeds the bounded-heap cap in
-    * the returned plan and the timed count() runs capped. */
+    * so the bounded-heap cap is embedded in the returned plan and the
+    * timed count() runs capped, while the caller's session is left as
+    * it was. */
   private val CapK = 8
   private def withCap(name: String): (SparkSession, String) => DataFrame =
-    (s, d) => {
-      s.conf.set(ops.PairCap.ConfKey, CapK.toString)
-      try SparkEntry.queries(name)(s, d)
-      finally s.conf.unset(ops.PairCap.ConfKey)
-    }
+    (s, d) => SparkEntry.queries(name)(
+      GraftSession.child(s, ops.PairCap.ConfKey -> CapK.toString), d)
   private val ProbeOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
     Map(
       "dedup_embedding_cosine_cap" -> withCap("dedup_embedding_cosine"),
@@ -176,41 +174,10 @@ object ScaleProbe {
 
   private def settle(): Unit = { System.gc(); Thread.sleep(50); System.gc() }
 
-  /** Untimed streaming bring-up (the Bench.streamWarmup rationale): the
-    * first streaming job in a JVM pays ~20 s of engine scaffolding that
-    * would otherwise land entirely on the 1× lane and fake sub-linearity. */
-  private def streamWarmup(spark: SparkSession, dir: String): Unit = try {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-spwarm").toString
-    val src = Tables.events(spark, dir).limit(50)
-    src.write.mode("overwrite").parquet(s"$tmp/in")
-    val q = spark.readStream.schema(src.schema).parquet(s"$tmp/in")
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour")).count()
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
-  } catch { case _: Throwable => () }
-
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors - 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(
+      math.max(4, Runtime.getRuntime.availableProcessors - 2)))
     // SPARK_GRAFT_PROBE_FACTOR (default 10): the replication factor of
     // the big lane — a 30× text-family lane probes one decade further
     val factor = sys.env.getOrElse("SPARK_GRAFT_PROBE_FACTOR", "10").toInt
@@ -231,7 +198,7 @@ object ScaleProbe {
     val errored = scala.collection.mutable.ArrayBuffer.empty[String]
     val dirs = Seq(1 -> s"$root/x1", factor -> s"$root/x$factor")
     dirs.foreach { case (k, out) => replicate(spark, base, out, k) }
-    streamWarmup(spark, dirs.head._2)
+    ops.Streaming.warmup(spark, dirs.head._2)
     def ms(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // per-query adjacency: each query's 1× and 10× runs are back-to-back

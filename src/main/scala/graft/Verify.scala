@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing names: verify only that subset (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // null-on-error cast/parse semantics to match the reference's
-      // strict-parse-else-reject pipeline (SURVEY §7.4#5); Spark 4
-      // defaults ANSI on.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // guard for a nanos-typed events.ts layout (reads as long, re-typed
-      // in Tables.normalizedTs); a no-op on the current µs layout
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
     // Family-ordered with cache hygiene at family boundaries, same as
     // Bench (r10 advice): the session-scoped plan-keyed caches (the text

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Training-data curation + pipeline-maintenance pack (SURVEY.md §2.B,
   * BASELINE.json north_star "large-scale training-data pipeline" family).
@@ -619,9 +619,6 @@ object Curation {
     * finalizing action IS the result pass, not an extra scan. Oracle:
     * the same skewed join in plain SQL. */
   def joinSkewAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    // conf-isolated child session (the runToParquet discipline): skew
-    // thresholds and the broadcast opt-out never leak to the caller
-    val session = spark.newSession()
     // Thresholds are FIXTURE-SCALED from the fact row count (a metadata
     // count, no scan): a constant hot key compresses to ~0.1-2 B/row
     // after shuffle compression, so a fixed byte threshold either never
@@ -630,8 +627,10 @@ object Curation {
     // plausible compressed floor, keeping the split count in single-to-
     // double digits at every SF — exactly how a production deployment
     // sizes these knobs to its own partition-size envelope.
-    val nFact = Tables.lineitem(session, sfDir).count()
-    Seq(
+    val nFact = Tables.lineitem(spark, sfDir).count()
+    // conf-isolated child session: skew thresholds and the broadcast
+    // opt-out never leak to the caller
+    val session = GraftSession.child(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
         math.max(256L, nFact / 16).toString,
@@ -640,7 +639,6 @@ object Curation {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-      .foreach { case (k, v) => session.conf.set(k, v) }
     import session.implicits._
     // A skewed reduce partition can only be split at MAP-output
     // boundaries: a 100 TB fact reaches its join from a scan or upstream
@@ -707,13 +705,11 @@ object Curation {
     * `join_dpp` and `scan_parquet_bloom`. Oracle: the same selective
     * join in plain SQL. */
   def joinRuntimeFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val session = spark.newSession()
-    Seq(
+    val session = GraftSession.child(spark,
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
       // force the shuffle join: a broadcast join prunes via the hash
       // relation itself and injects no runtime filter
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      .foreach { case (k, v) => session.conf.set(k, v) }
     import session.implicits._
     val li = Tables.lineitem(session, sfDir)
     val urgent = Tables.orders(session, sfDir)

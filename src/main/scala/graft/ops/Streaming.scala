@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Streaming pack (SURVEY.md §2.B) over `events`.
   *
@@ -1080,11 +1080,10 @@ object Streaming {
   private def streamStateParts(spark: SparkSession): String =
     math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 4).toString
 
-  /** The child session a stream run is built and run in (`newSession`:
-    * shared SparkContext, isolated SQLConf), so per-run streaming conf —
-    * state partition count, state store provider — never mutates the
-    * caller's session. Set-and-restore on a shared session would race any
-    * query running concurrently on it.
+  /** The child session a stream run is built and run in
+    * ([[GraftSession.child]]), so per-run streaming conf — state
+    * partition count, state store provider — never mutates the caller's
+    * session.
     *
     * `rocksDb` selects the RocksDB state store with changelog
     * checkpointing: each commit uploads the batch's CHANGED keys instead
@@ -1095,23 +1094,23 @@ object Streaming {
     * replays changelog over the last snapshot (pinned by the StreamingSpec
     * restart-recovery test). Per-row total-count tracking is off: it costs
     * a RocksDB get per put purely to feed the numRowsTotal metric, which
-    * nothing reads. `conf` is applied last and overrides any of these. */
-  private def streamChild(spark: SparkSession, rocksDb: Boolean,
-                          conf: (String, String)*): SparkSession = {
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", streamStateParts(spark))
-    if (rocksDb) {
-      child.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      child.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      child.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-    }
-    conf.foreach { case (k, v) => child.conf.set(k, v) }
-    child
+    * nothing reads. AQE is off: streaming execution runs without it
+    * anyway and logs a `ResolveWriteToStream` WARN for every query
+    * started on an AQE session; off here, it changes only the child's
+    * batch jobs (staging and state-reader writes).
+    * `conf` is applied last and overrides any of these. */
+  private[graft] def streamChild(spark: SparkSession, rocksDb: Boolean,
+                                 conf: (String, String)*): SparkSession = {
+    val rocks =
+      if (!rocksDb) Nil
+      else Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
+    GraftSession.child(spark, Seq(
+      "spark.sql.shuffle.partitions" -> streamStateParts(spark),
+      "spark.sql.adaptive.enabled" -> "false") ++ rocks ++ conf: _*)
   }
 
   /** Run `writer` to completion: start it on the `$dir/chk` checkpoint
@@ -1142,6 +1141,33 @@ object Streaming {
   private def releaseCheckpoint(dir: String): Unit = {
     org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
     deleteRec(new java.io.File(s"$dir/chk"))
+  }
+
+  /** Untimed streaming bring-up for the timing mains: the micro-batch
+    * engine, parquet sink commit protocol and state-store machinery cost
+    * ~20 s the FIRST time any streaming query runs in a JVM (class
+    * loading, codegen, sink/checkpoint scaffolding, RocksDB native init).
+    * One throwaway AvailableNow window-agg over 50 rows, on the same
+    * RocksDB child every graft run uses, moves that bill out of the
+    * first timed stream query. A failed warm-up is logged, not thrown:
+    * the timings stay valid, the first stream query just pays the
+    * bring-up. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    val dir = scratchDir()
+    try {
+      val src = Tables.events(spark, sfDir).limit(50)
+      src.write.mode("overwrite").parquet(s"$dir/in")
+      try runToEnd(streamChild(spark, rocksDb = true)
+          .readStream.schema(src.schema).parquet(s"$dir/in")
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 hour")).count()
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$dir/out"), dir, minDataBatches = 0)
+      finally releaseCheckpoint(dir)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[warmup] failed: $e")
+    } finally deleteRec(new java.io.File(dir))
   }
 
   /** Run a streaming frame to a parquet FILE sink on a child session and
@@ -2622,7 +2648,7 @@ object Streaming {
     val src = eventsStream(spark, sfDir)
       .select($"user_id", $"event_id", unix_micros($"ts").as("us"),
         $"event_type", $"value")
-    // on the caller's session, not a child: a newSession() child lacks
+    // on the caller's session, not a child: a GraftSession.child lacks
     // graft's extensions, which would change the upsert plan
     runToEnd(src.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -21,9 +21,9 @@ import org.apache.spark.sql.execution.SparkStrategy
   * driver's own session). `SparkEntry.queries` installs before every
   * query, so callers that hand it a bare session get the same plans.
   *
-  * Sessions from `newSession()` start from a fresh session state, so a
-  * child of an installed session has none of these until it is installed
-  * itself.
+  * Child sessions (`graft.GraftSession.child`) start from a fresh session
+  * state, so a child of an installed session has none of these until it
+  * is installed itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._

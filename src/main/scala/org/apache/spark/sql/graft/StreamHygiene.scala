@@ -27,9 +27,9 @@ object StreamHygiene {
     * termination first; the check turns a latent misuse into a loud error.
     *
     * Each session has its OWN StreamingQueryManager, and the repo's
-    * streaming runners execute on `newSession()` children — so the guard
-    * checks the calling thread's active session AND the default (root)
-    * session (r10 advice). A query started on a session visible through
+    * streaming runners execute on `graft.GraftSession.child` sessions —
+    * so the guard checks the calling thread's active session AND the
+    * default (root) session (r10 advice). A query started on a session visible through
     * neither handle (another thread's child session) is outside what any
     * in-process check can enumerate; that residual blind spot is accepted
     * and documented rather than claimed covered. */

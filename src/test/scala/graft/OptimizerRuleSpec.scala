@@ -54,9 +54,9 @@ class OptimizerRuleSpec extends SparkSuite {
 
   // ---------------------------------------------------- FirstRowPerKeyRule
 
-  /** The shared session carries the rule; a `newSession()` child has
+  /** The shared session carries the rule; a [[GraftSession.child]] has
     * none of graft's extensions, so it plans the plain window form. */
-  private lazy val plainSession = spark.newSession()
+  private lazy val plainSession = GraftSession.child(spark)
 
   private def heapIn(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collect {

@@ -13,6 +13,9 @@ import graft.ops.Streaming
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def mem(df: org.apache.spark.sql.DataFrame, mode: String): String = {
     val name = "t" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
@@ -477,9 +480,7 @@ class StreamingSpec extends SparkSuite {
     // appear; a stale un-deleted timer would emit the pre-extension
     // session too. User 2's fresh session stays withheld (wm < expiry).
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -526,9 +527,7 @@ class StreamingSpec extends SparkSuite {
     // unsealed and mergeable. After the watermark passes 11:05, exactly
     // one merged session must emit ('timer': it is u1's last).
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -575,9 +574,7 @@ class StreamingSpec extends SparkSuite {
     //     re-armed timer) never move backwards — the naive lastUs = e.us
     //     fold would seal the session early with a truncated last_ts.
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -626,9 +623,7 @@ class StreamingSpec extends SparkSuite {
     // provisional sessions; 10:28 must bridge-merge them — one session
     // 10:00-10:35 n=3, identical to chronological delivery.
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -668,7 +663,7 @@ class StreamingSpec extends SparkSuite {
     // exact ms equality: u1's unmatched click at 10:00 expires at 11:00,
     // and both sides' max ts of 12:00 puts the final watermark at
     // exactly 11:00 — the null-extension must be emitted, not withheld
-    val session = spark.newSession()
+    val session = GraftSession.child(spark)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -708,9 +703,7 @@ class StreamingSpec extends SparkSuite {
     // under Append would append a stale ("view",1) again and any
     // downstream consumer of the append stream would double-count it)
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val input = MemoryStream[graft.ops.KeyedEvent]
@@ -751,9 +744,7 @@ class StreamingSpec extends SparkSuite {
     // sleep is 10x the TTL, so the ordering is not timing-sensitive.
     import org.apache.spark.sql.streaming.OutputMode
     def run(ttl: java.time.Duration): Seq[Long] = {
-      val session = spark.newSession()
-      session.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val session = GraftSession.child(spark, RocksDb)
       // ProcessingTime mode forces shouldRunAnotherBatch=true, so no-data
       // batches would spin forever and processAllAvailable would never
       // return (see streamTwsTtl). TTL expiry is checked lazily on state
@@ -798,12 +789,8 @@ class StreamingSpec extends SparkSuite {
     // (n=2), not restart. Parquet sink: the memory sink refuses
     // checkpoint recovery in append mode.
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    session.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
+    val session = GraftSession.child(spark, RocksDb,
+      ("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true"))
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-recov").toString
@@ -849,10 +836,8 @@ class StreamingSpec extends SparkSuite {
     // statestore reader over the query's own checkpoint: after batch 2
     // (key 3 only, long past keys 1/2's TTL) the census must be {3}.
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val session = GraftSession.child(spark, RocksDb,
+      ("spark.sql.streaming.noDataMicroBatches.enabled", "false"))
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-ttlev").toString
@@ -908,7 +893,7 @@ class StreamingSpec extends SparkSuite {
     // count, and the keep-latest collapse (max by n) recovers the final
     // value. Window A is touched in batches 1 AND 2 (n=2 then n=3) —
     // two emissions, strictly growing; window B emits once.
-    val session = spark.newSession()
+    val session = GraftSession.child(spark)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -952,9 +937,7 @@ class StreamingSpec extends SparkSuite {
     // OVERWRITES the crashed attempt's output, so the replay is absorbed:
     // same final snapshot, nothing double-counted. The replay itself is
     // asserted (batch 1 runs twice), so the test can't pass vacuously.
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
@@ -1014,11 +997,9 @@ class StreamingSpec extends SparkSuite {
     // and the keys genuinely spread over >1 partition (a single-partition
     // readout would make the census vacuous).
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
     val nParts = 4
-    session.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb,
+      ("spark.sql.shuffle.partitions", nParts.toString))
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
@@ -1066,9 +1047,7 @@ class StreamingSpec extends SparkSuite {
     // bootstrap; key 2 has no bootstrap and starts at n=1; key 3 is
     // bootstrap-only and must never emit (Append emits only on input).
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val initState = Seq(
@@ -1107,9 +1086,7 @@ class StreamingSpec extends SparkSuite {
     // the incremental contract the batch oracle can't see: batch 2's
     // emission must rank the NEW row against the CARRIED top-3 list
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val input = MemoryStream[graft.ops.KeyedEvent]
@@ -1157,10 +1134,8 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val dir = java.nio.file.Files.createTempDirectory("graft-port").toString
     def leg(parts: Int): Unit = {
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      session.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val session = GraftSession.child(spark, RocksDb,
+        ("spark.sql.shuffle.partitions", parts.toString))
       import session.implicits._
       val q = session.readStream
         .schema(org.apache.spark.sql.Encoders.product[graft.ops.KeyedEvent].schema)
@@ -1190,7 +1165,7 @@ class StreamingSpec extends SparkSuite {
       leg(3)
       feed(spark, (11L to 30L).map(k => graft.ops.KeyedEvent(k, 100 + k, 20L, "b")))
       leg(8) // same checkpoint, DIFFERENT session conf
-      val session = spark.newSession()
+      val session = GraftSession.child(spark)
       import session.implicits._
       // (b) the catalog pins the first-start layout, not the restart conf
       val metaParts = session.read.format("state-metadata")
@@ -1230,14 +1205,10 @@ class StreamingSpec extends SparkSuite {
     val nParts = 2
     val dir = java.nio.file.Files.createTempDirectory("graft-twsnap").toString
     def leg(): Unit = {
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-      session.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      session.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      session.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
+      val session = GraftSession.child(spark, RocksDb,
+        ("spark.sql.shuffle.partitions", nParts.toString),
+        ("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true"),
+        ("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1"))
       import session.implicits._
       val q = session.readStream
         .schema(org.apache.spark.sql.Encoders.product[graft.ops.KeyedEvent].schema)
@@ -1287,7 +1258,7 @@ class StreamingSpec extends SparkSuite {
         assert(changelogs.exists(_ > snapVersion),
           s"no post-snapshot changelog on p$p — leg 2 committed nothing to replay")
       }
-      val session = spark.newSession()
+      val session = GraftSession.child(spark)
       def readState(opts: Map[String, String]) =
         opts.foldLeft(session.read.format("statestore")
             .option("path", s"$dir/chk").option("stateVarName", "job")) {
@@ -1324,10 +1295,8 @@ class StreamingSpec extends SparkSuite {
     // its own id/store/batch coordinates — is pinned here instead: a
     // watermarked dedup feeding a windowed agg is two stateful operators
     // and must surface as exactly two catalog rows.
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb,
+      ("spark.sql.shuffle.partitions", "4"))
     val dir = java.nio.file.Files.createTempDirectory("graft-meta").toString
     try {
       val schema = session.read.parquet(s"$sfDir/events.parquet").schema
@@ -1372,7 +1341,7 @@ class StreamingSpec extends SparkSuite {
     // join condition, click-side null-extensions are exactly the rows
     // with purchase_id IS NULL, purchase-side ones exactly click_id IS
     // NULL, and both expire under the same watermark rule.
-    val session = spark.newSession()
+    val session = GraftSession.child(spark)
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -1436,8 +1405,7 @@ class StreamingSpec extends SparkSuite {
     // and left-outer operators' buffers row-for-row equal; this re-pins
     // the state-level invariance against INDEPENDENTLY-RUN joins over
     // one fixture, read back through the statestore source.
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "2")
+    val session = GraftSession.child(spark, ("spark.sql.shuffle.partitions", "2"))
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -1509,10 +1477,8 @@ class StreamingSpec extends SparkSuite {
     // assignment mechanically so a Spark-version drift surfaces HERE,
     // with a named message, instead of as an opaque statestore error.
     import org.apache.spark.sql.streaming.OutputMode
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "2")
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val session = GraftSession.child(spark, RocksDb,
+      ("spark.sql.shuffle.partitions", "2"))
     import session.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     val input = MemoryStream[graft.ops.KeyedEvent]

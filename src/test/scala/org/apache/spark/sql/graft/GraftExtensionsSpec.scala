@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** GraftExtensions is the one list of graft's functions, rules and
   * strategies: the config entry point (spark.sql.extensions) and the
   * runtime `install` expose the same set, `install` is idempotent and
-  * quiet, and `newSession()` children inherit none of it. */
+  * quiet, and children (`graft.GraftSession.child`) inherit none of it. */
 class GraftExtensionsSpec extends graft.SparkSuite {
 
   private val names = Seq("graft_dot", "graft_bloom_agg", "graft_might_contain")
@@ -90,7 +90,7 @@ class GraftExtensionsSpec extends graft.SparkSuite {
 
   test("newSession() children inherit none of the installed extensions") {
     assert(names.forall(spark.catalog.functionExists), "shared session not installed")
-    val child = spark.newSession()
+    val child = graft.GraftSession.child(spark)
     assert(names.forall(n => !child.catalog.functionExists(n)))
     assert(GraftExtensions.rules.forall(r => !child.experimental.extraOptimizations.contains(r)))
     assert(GraftExtensions.strategies.forall(r => !child.experimental.extraStrategies.contains(r)))
