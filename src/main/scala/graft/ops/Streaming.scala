@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -394,21 +394,18 @@ object Streaming {
     * UUID dirs (r12 judge: 2,133 dirs / 428 MB of dead sink output). */
   val ScratchRoot = "/root/repo/target/stream"
 
-  private def scratchDir(): String =
-    ScratchRoot + "/" + java.util.UUID.randomUUID.toString.replace("-", "")
+  /** A fresh uniquely named dir path under `ScratchRoot/subtree`. */
+  private def scratchDir(subtree: String = ""): String =
+    s"$ScratchRoot/$subtree" + java.util.UUID.randomUUID.toString.replace("-", "")
 
   /** Pinned subtree for staged INPUT layouts (r20): the registry-cached
-    * det-cut / sampled stagings live here so the family-boundary sweep
-    * keeps them — runs in BOTH board families (`scan_state_*` and
+    * time-cut stagings ([[stageByTime]]) live here so the family-boundary
+    * sweep keeps them — runs in BOTH board families (`scan_state_*` and
     * `stream_*`) consume the same layouts, and per-family re-staging was
     * two extra corpus passes per board. [[sweepAllScratch]] reclaims the
     * subtree (with the registry) at pass end, same lifecycle as the
     * pinned pair runs. */
   private val StagedDirName = "staged-inputs"
-
-  private def stagedScratchDir(): String =
-    ScratchRoot + s"/$StagedDirName/" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
 
   /** Run independent driver-side jobs concurrently (guide §2.6): Spark's
     * scheduler happily overlaps jobs submitted from several threads, so
@@ -514,14 +511,18 @@ object Streaming {
       .orderBy($"win_start", $"event_type")
   }
 
-  /** The staged multi-batch tumbling aggregation shared by
-    * [[streamTumbling]] (emitted side), [[scanStateWindow]] (buffered
-    * side) and [[streamUpdateWindows]] (eager side). */
+  /** The staged multi-batch tumbling aggregation of the standalone runs:
+    * [[streamTumblingParts]] at a part count other than the board's 3,
+    * and [[streamUpdateWindows]] (eager side). */
   private def stagedTumblingAgg(session: SparkSession, sfDir: String,
                                 parts: Int = 3): DataFrame =
-    stagedEventsStream(session, sfDir, parts)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+    windowAgg(stagedStream(session, stagedEvents(session, sfDir, parts)))
+
+  /** count + exact sum(value) per event_type per 1-hour window under a
+    * 10-minute watermark: tumbling, or sliding every `slide`. */
+  private def windowAgg(src: DataFrame, slide: String = "1 hour"): DataFrame =
+    src.withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour", slide), col("event_type"))
       .agg(count(lit(1)).as("n"),
         dec6(sum(dec6(col("value")))).as("sum_value"))
 
@@ -569,40 +570,34 @@ object Streaming {
       val child = streamChild(spark, rocksDb = true,
         "spark.sql.shuffle.partitions" -> nStateParts.toString,
         "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1")
-      val schema = child.read.parquet(s"$sfDir/events.parquet").schema
-      val stage = scratchDir()
       // the pinned registry layout is hard-LINKED into this run's own
       // admit-in-waves dir (links share the already-stamped mtimes;
       // deleting the run's links at sweep leaves the registry files alone)
-      val parts = stageEvents(child, sfDir, 3)
-      new java.io.File(s"$stage/staged").mkdirs(): Unit
-      def admit(f: java.io.File): Unit = Streaming.admit(f, s"$stage/staged")
-      def srcDf = child.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$stage/staged")
-        .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
+      val watched = s"${scratchDir()}/staged"
+      val parts = stagedFiles(stagedEvents(child, sfDir))
+      new java.io.File(watched).mkdirs(): Unit
+      parts.take(2).foreach(admit(_, watched))
+      def srcDf = stagedStream(child, watched)
       // FOUR stateful operators in one query: the tumbling agg, the native
       // session_window agg, the TWS timer sessionization and the sliding
       // agg consume the same staged source; every branch watermarks the
       // same ts by 10 min, so the global watermark equals each standalone
       // run's and every consumer's rows are unchanged. All four ride the
       // two-leg protocol harmlessly: their censuses are
-      // batch-count-invariant under time-contiguous staging.
+      // batch-count-invariant under time-contiguous staging. Both legs
+      // start this one frame, each as a NEW query on the checkpoint.
       val nullWin = lit(null).cast("struct<start:timestamp,end:timestamp>")
-      def unionDf = {
+      val unionDf = {
         import child.implicits._
-        val tum = srcDf
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            dec6(sum(dec6(col("value")))).as("sum_value"))
-          .select(lit("tumbling").as("kind"), col("window"), col("event_type"),
+        // the tumbling and sliding branches share one column set
+        def windowBranch(kind: String, slide: String) = windowAgg(srcDf, slide)
+          .select(lit(kind).as("kind"), col("window"), col("event_type"),
             col("n"), col("sum_value"),
             lit(null).cast("long").as("user_id"),
             lit(null).cast("string").as("first_ts"),
             lit(null).cast("string").as("last_ts"),
             lit(null).cast("long").as("n_events"))
+        val tum = windowBranch("tumbling", "1 hour")
         val nat = sessionAggOf(srcDf)
           .select(lit("native").as("kind"), nullWin.as("window"),
             lit(null).cast("string").as("event_type"),
@@ -628,26 +623,13 @@ object Streaming {
             date_format(timestamp_micros(col("startUs")), tsFmt).as("first_ts"),
             date_format(timestamp_micros(col("endUs")), tsFmt).as("last_ts"),
             col("n_events"))
-        // same watermark and column set as the tumbling branch, so the
-        // union schema is unchanged
-        val sld = srcDf
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            dec6(sum(dec6(col("value")))).as("sum_value"))
-          .select(lit("sliding").as("kind"), col("window"), col("event_type"),
-            col("n"), col("sum_value"),
-            lit(null).cast("long").as("user_id"),
-            lit(null).cast("string").as("first_ts"),
-            lit(null).cast("string").as("last_ts"),
-            lit(null).cast("long").as("n_events"))
+        val sld = windowBranch("sliding", "30 minutes")
         tum.unionByName(nat).unionByName(tws).unionByName(sld)
       }
       val sinkSchema = unionDf.schema
       def runLeg(minBatches: Int): Unit =
         runToEnd(unionDf.writeStream.outputMode("append").format("parquet")
           .option("path", s"$pdir/out"), pdir, minBatches)
-      parts.take(2).foreach(admit)
       // leg 1 skips its trailing no-data micro-batch: that batch only
       // advances the watermark and flushes the windows it seals, and leg
       // 2's first batch performs exactly the same advancement from the
@@ -680,7 +662,7 @@ object Streaming {
         sys.error("forced maintenance left no snapshot version common to " +
           s"all $nStateParts state partitions (per-partition *.zip: $detail)")
       }
-      parts.drop(2).foreach(admit)
+      parts.drop(2).foreach(admit(_, watched))
       // leg 2 needs NO local native checkpoints: its full snapshot is
       // already uploaded and its commits are changelog-only BY DESIGN.
       // Leg 2 is a NEW query (its own StateStoreConf snapshot), so raising
@@ -697,9 +679,8 @@ object Streaming {
       // The five state reads are independent jobs over one terminated
       // checkpoint, run concurrently so the later reads back-fill the
       // earlier reads' task tails. Operator ids follow the union branch
-      // order tumbling=0, native session=1, TWS=2, sliding=3 — a crossed
-      // id fails LOUDLY at decode time: the stores share no key/value
-      // shape.
+      // order tumbling=0, native session=1, TWS=2, sliding=3 (see
+      // TumWindowOperatorId for which crossed ids fail at decode time).
       runConcurrently(Seq(
         // read 0: the direct latest-state census (scan_state_window's
         // consumer projects the window columns; partition_id rides along
@@ -869,11 +850,14 @@ object Streaming {
         date_format(max(col("ts")), tsFmt).as("last_ts"))
 
   /** Operator ids inside the merged [[tumblingRun]] union query (the
-    * tcrec discipline): deterministic for the fixed three-branch plan
-    * order tumbling=0, native session=1, TWS=2, and a wrong id fails
-    * LOUDLY at read time — the three stores share no key/value shape
-    * (window-keyed agg buffer vs session-window agg buffer vs TWS
-    * timers). */
+    * tcrec discipline): deterministic for the fixed four-branch plan
+    * order tumbling=0, native session=1, TWS=2, sliding=3. A session or
+    * TWS id crossed with any other fails LOUDLY at read time: the
+    * session-window agg buffer and the TWS timers share no key/value
+    * shape with each other or with a window agg buffer. The tumbling and
+    * sliding stores DO share one (window, event_type) → (count, sum), so
+    * a crossed pair of those two reads cleanly and fails at the oracle
+    * instead (sliding instances start on the half hour too). */
   private val TumWindowOperatorId = "0"
   private val SessAggOperatorId = "1"
   private val SessTwsOperatorId = "2"
@@ -925,80 +909,50 @@ object Streaming {
   }
 
   /** Staged-input registry: the stream family has several multi-batch
-    * consumers of the SAME staged layout, so the table is staged once per
-    * (sfDir, parts) and reused for the whole pass: the family-boundary
-    * [[sweepScratch]] leaves the staged subtree alone, and only the
-    * closing [[sweepAllScratch]] deletes the files and clears the
+    * consumers of the SAME staged layout, so an input is staged once per
+    * key (`sfDir#parts` for `events`) and reused for the whole pass: the
+    * family-boundary [[sweepScratch]] leaves the staged subtree alone, and
+    * only the closing [[sweepAllScratch]] deletes the files and clears the
     * registry in the same breath — the stage-once / consume-many shape
     * shared input staging has in production, and ~1 s per consumer saved
     * locally. */
   private val stagedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Stage `events` into `parts` TIME-CONTIGUOUS, mtime-ordered parquet
-    * files (reused via [[stagedDirs]]) and return the file list. */
-  private def stageEvents(session: SparkSession, sfDir: String,
-                          parts: Int): Seq[java.io.File] = {
-    // mtimes are stamped strictly increasing in range order inside
-    // stageFrame — fail-loud there (r13 advice): a silently unstamped
-    // mtime breaks the oldest-first batch order the batch≡stream oracle
-    // rests on, surfacing only as a downstream hash flake
-    val staged = stageFrame(session, s"$sfDir#$parts",
-      session.read.parquet(s"$sfDir/events.parquet"), parts)
-    Option(new java.io.File(staged).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-  }
-
-  /** The events stream as ≥`parts` REAL micro-batches (r12 judge item 3):
-    * stage the table into `parts` TIME-CONTIGUOUS files (repartitionByRange
-    * on ts, sorted within each) and stream them `maxFilesPerTrigger=1`, so
-    * an AvailableNow run executes one data batch per file — state carry,
-    * watermark advance, and seal timing are exercised on the BOARD, not
-    * just in MemoryStream specs.
+  /** Stage an events-shaped `frame` (ts already normalised by
+    * [[Tables.events]]) into `parts` TIME-CUT, mtime-ordered parquet
+    * files — the uploaded-file-in-ordered-chunks shape of the reference's
+    * chunk commits — and return their dir, registry-cached under `key`.
+    * File i holds the events with µs time in
+    * `(cut(i−1), cut(i)]`, `cut(i) = lo + (hi−lo)·(i+1)/parts`, so every
+    * event of file k is strictly older than every event of file k+1 and
+    * equal-µs events never split.
     *
-    * Batch-count invariance is BY CONSTRUCTION, so the single-batch SQL
-    * oracle still holds: files are processed oldest-first (mtimes stamped
-    * strictly increasing in range order), every event of batch N+1 is
-    * younger than all of batch N, hence (a) no event ever arrives behind
-    * the watermark — nothing is late-dropped that the batch plan counts —
-    * and (b) the final watermark equals the single-batch run's. Range
-    * boundaries are sampled (placement may vary run to run); contiguity,
-    * not placement, is what the invariance needs. */
-  private def stagedEventsStream(session: SparkSession, sfDir: String,
-                                 parts: Int): DataFrame = {
-    val schema = session.read.parquet(s"$sfDir/events.parquet").schema
-    val files = stageEvents(session, sfDir, parts)
-    session.readStream.schema(schema)
-      .option("pathGlobFilter", "part-*")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(files.head.getParent)
-      .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
-  }
-
-  /** [[stageEvents]] with DETERMINISTIC batch boundaries: files cut at
-    * the integer-µs time thirds `lo + (hi−lo)·(i+1)/parts` instead of
-    * sampled range-partition boundaries. The per-batch STATE CONTENT
-    * becomes a pure function of the data — which is what lets a SQL
-    * oracle replay batch-RESOLVED artifacts (the state change feed, a
-    * time-travel read at batchId b); the sampled variant only guarantees
-    * the batch-count-INVARIANT final result. Registry-cached like the
-    * sampled layout. */
-  private def stageEventsByTime(session: SparkSession, sfDir: String,
-                                parts: Int): String =
-    stagedDirs.computeIfAbsent(s"$sfDir#det#$parts", _ => {
-      val dir = stagedScratchDir()
-      val schema = session.read.parquet(s"$sfDir/events.parquet").schema
-      val nts = unix_micros(Tables.normalizedTs(schema("ts").dataType))
-      val ev = session.read.parquet(s"$sfDir/events.parquet")
-      val bounds = ev.agg(min(nts), max(nts)).head()
+    * Streamed one file per trigger ([[stagedStream]]), the files become
+    * `parts` REAL micro-batches whose content is a pure function of the
+    * data. Two properties follow. (a) Batch-count invariance: files are
+    * processed oldest-first, so no event ever arrives behind the
+    * watermark and the final watermark equals the single-batch run's —
+    * every watermark-sealed census, join expiry and commutative fold
+    * equals its single-batch SQL oracle. (b) Batch resolution: a SQL
+    * oracle can replay per-batch artifacts (the state change feed, a
+    * time-travel read at batchId b), and an order-sensitive fold (the
+    * greedy quota reset) folds in the global (us, event_id) order. */
+  private[graft] def stageByTime(key: String, frame: => DataFrame,
+                                 parts: Int): String =
+    stagedDirs.computeIfAbsent(key, _ => {
+      val dir = scratchDir(s"$StagedDirName/")
+      val ev = frame
+      val us = unix_micros(col("ts"))
+      val bounds = ev.agg(min(us), max(us)).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
       def cut(i: Int): Long = lo + (hi - lo) * (i + 1) / parts
       // ONE pass (r16; was one filtered scan per cut): tag each row with
-      // its cut index — smallest i with nts ≤ cut(i) — hash-partition on
+      // its cut index — smallest i with us ≤ cut(i) — hash-partition on
       // the tag (each cut lands wholly in one task ⇒ exactly one file per
       // partitionBy dir) and let partitionBy strip the tag from the data.
       val idx = (0 until parts - 1).foldRight(lit(parts - 1).cast("int")) {
-        case (i, acc) => when(nts <= cut(i), i).otherwise(acc)
+        case (i, acc) => when(us <= cut(i), i).otherwise(acc)
       }
       ev.withColumn("__cut", idx)
         .repartition(parts, col("__cut"))
@@ -1009,64 +963,71 @@ object Streaming {
         // invariant rests on hash repartition giving each cut ONE writer
         // task — if a session ever sets maxRecordsPerFile (or a writer
         // splits files), find() would silently DROP the extra files and
-        // the staged batches would lose rows; fail loud instead
+        // the staged batches would lose rows; fail loud instead. An
+        // empty cut fails too: it would cost the run a micro-batch.
         val found = Option(
             new java.io.File(s"$dir/r/__cut=$i").listFiles()).toSeq
           .flatten.filter(_.getName.startsWith("part-"))
         if (found.isEmpty) sys.error(
-          s"time cut $i of $parts produced no part file for $sfDir " +
+          s"time cut $i of $parts produced no part file for $key " +
             "(degenerate/clustered timestamps?)")
         if (found.size > 1) sys.error(
           s"time cut $i of $parts produced ${found.size} part files — the " +
             "one-writer-task-per-cut invariant is broken (is " +
             "spark.sql.files.maxRecordsPerFile set on this session?)")
-        val part = found.head
         val dst = new java.io.File(f"$dir/staged/part-$i%05d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath): Unit
+        java.nio.file.Files.move(found.head.toPath, dst.toPath): Unit
+        // fail-loud stamp (r13 advice): a silently unstamped mtime breaks
+        // the oldest-first batch order the batch≡stream oracle rests on,
+        // surfacing only as a downstream hash flake
         require(dst.setLastModified(1000000000000L + i * 60000L),
           s"mtime stamp failed for $dst")
       }
       s"$dir/staged"
     })
 
-  /** [[stagedEventsStream]] over DETERMINISTIC time-cut batches
-    * ([[stageEventsByTime]]): for ORDER-SENSITIVE folds (the greedy quota
-    * reset) batch boundaries must never split equal-µs events — time cuts
-    * guarantee batch k's every event is strictly older than batch k+1's,
-    * so carried-state fold order across batches equals the global
-    * (us, event_id) order the batch oracle replays. */
-  private def stagedEventsStreamDet(session: SparkSession, sfDir: String,
-                                    parts: Int): DataFrame = {
-    val schema = session.read.parquet(s"$sfDir/events.parquet").schema
-    val staged = stageEventsByTime(session, sfDir, parts)
-    session.readStream.schema(schema)
+  /** `events` staged into `parts` time cuts ([[stageByTime]]). */
+  private def stagedEvents(session: SparkSession, sfDir: String,
+                           parts: Int = 3): String =
+    stageByTime(s"$sfDir#$parts", Tables.events(session, sfDir), parts)
+
+  /** The staged files of `dir`, in admission (= time) order. */
+  private def stagedFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  /** The one reader of a staged dir: a file stream over its `part-*`
+    * files, oldest mtime first. `oneFilePerTrigger` caps each micro-batch
+    * at one file, so an AvailableNow run executes one data batch per time
+    * cut and state carry, watermark advance and seal timing run on the
+    * board, not just in MemoryStream specs. */
+  private def stagedStream(session: SparkSession, dir: String,
+                           oneFilePerTrigger: Boolean = true): DataFrame = {
+    val reader = session.readStream.schema(session.read.parquet(dir).schema)
       .option("pathGlobFilter", "part-*")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
+    (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", "1")
+     else reader).parquet(dir)
   }
 
-  /** Stage an arbitrary events-shaped FRAME (e.g. the post-midpoint slice
-    * `stream_tws_init` streams) into `parts` time-contiguous mtime-ordered
-    * files, registry-cached under `cacheKey` — [[stageEvents]]
-    * generalized to derived inputs. */
-  private def stageFrame(session: SparkSession, cacheKey: String,
-                         frame: DataFrame, parts: Int): String = {
-    val staged = stagedDirs.computeIfAbsent(cacheKey, _ => {
-      val dir = stagedScratchDir()
-      frame
-        .repartitionByRange(parts, col("ts"))
-        .sortWithinPartitions("ts")
-        .write.parquet(s"$dir/staged")
-      val files = Option(new java.io.File(s"$dir/staged").listFiles()).toSeq
-        .flatten.filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(1000000000000L + i * 60000L),
-          s"mtime stamp failed for $f")
-      }
-      s"$dir/staged"
-    })
-    staged
+  /** The keyed projection every status and collection fold consumes. */
+  private def keyedEvents(events: DataFrame): Dataset[KeyedEvent] = {
+    import events.sparkSession.implicits._
+    events.select($"user_id", $"event_id", unix_micros($"ts").as("us"),
+      $"event_type").as[KeyedEvent]
+  }
+
+  /** Keep-latest collapse of per-batch status snapshots: n_events
+    * strictly grows per key per emission, so max(struct) per user is the
+    * final state — batch-count-invariant, and a re-appended retry is
+    * absorbed. */
+  private def latestStatus(snapshots: DataFrame): DataFrame = {
+    import snapshots.sparkSession.implicits._
+    snapshots.groupBy($"user_id")
+      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
+      .select($"user_id", $"s.n_events".as("n_events"),
+        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
+        $"s.event_type".as("event_type"))
+      .orderBy($"user_id")
   }
 
   /** Streaming-child shuffle/state partition count: every run here
@@ -1193,7 +1154,7 @@ object Streaming {
   }
 
   /** Windowed count under a 10-minute watermark, append mode, over ≥3
-    * REAL micro-batches ([[stagedEventsStream]]): open windows are carried
+    * REAL micro-batches ([[stageByTime]]): open windows are carried
     * in state across batches, the watermark advances batch by batch, and
     * a window is emitted exactly once — in the batch whose watermark
     * seals it. Time-contiguous staging means no event is late-dropped and
@@ -1225,7 +1186,7 @@ object Streaming {
     * iterator order (which Spark does not define) cannot change the
     * result.
     *
-    * Runs as ≥3 REAL micro-batches ([[stagedEventsStream]], r12 judge
+    * Runs as ≥3 REAL micro-batches ([[stageByTime]], r12 judge
     * item 3): a key's state genuinely carries across batches and each
     * batch with input for the key appends an UPDATED snapshot (n strictly
     * grows), so the batch-side keep-latest collapse below (max struct
@@ -1239,20 +1200,12 @@ object Streaming {
     import spark.implicits._
     // flatMapGroupsWithState branch of the shared aux run: the FMGWS
     // operator — the API this query demonstrates — runs as operator 2 of
-    // the union, on det cuts. The fold is the commutative count+latest
-    // (the docstring's own argument), so the keep-latest collapse below
-    // is cut-invariant — the same final census as any staging.
+    // the union. The fold is the commutative count+latest (the
+    // docstring's own argument), so the keep-latest collapse is
+    // cut-invariant — the same final census as any staging.
     val run = auxUnionRun(spark, sfDir)
-    spark.read.schema(run.schema).parquet(run.out)
-      .filter($"kind" === "fmgws")
-      // keep-latest collapse of the per-batch snapshots: n_events strictly
-      // increases per key per emission, so max(struct) is the final state
-      .groupBy($"user_id")
-      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
-      .select($"user_id", $"s.n_events".as("n_events"),
-        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
-        $"s.event_type".as("event_type"))
-      .orderBy($"user_id")
+    latestStatus(spark.read.schema(run.schema).parquet(run.out)
+      .filter($"kind" === "fmgws"))
   }
 
   /** The reference's flagship path — CSV upload → validate/classify →
@@ -1352,7 +1305,7 @@ object Streaming {
     * BOTH directions, so Spark can size the join state store and expire
     * rows — the canonical stream-stream join contract.
     *
-    * Runs as ≥3 REAL micro-batches ([[stagedEventsStream]], r13): a
+    * Runs as ≥3 REAL micro-batches ([[stageByTime]], r13): a
     * click held in join state genuinely waits across batches for its
     * purchase, and expired windows are evicted batch by batch. The
     * emitted set still equals the batch time-range join — the oracle's
@@ -1444,7 +1397,7 @@ object Streaming {
   private def stagedOuterClickPurchaseJoin(session: SparkSession,
                                            sfDir: String,
                                            joinType: String): DataFrame = {
-    val ev = stagedEventsStream(session, sfDir, 3)
+    val ev = stagedStream(session, stagedEvents(session, sfDir))
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -1545,23 +1498,12 @@ object Streaming {
   def streamTwsState(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // emitted side of the shared det-status run: sink, state and the
-    // batch-resolved reads come off ONE checkpoint — the keep-latest
-    // collapse below is batch-count-invariant, so the deterministic time
-    // cuts serve it as any staging would
+    // batch-resolved reads come off ONE checkpoint. The statusStream
+    // runs ≥3 staged micro-batches (r15) and each batch with input for a
+    // key appends an UPDATED snapshot, which the collapse absorbs.
     val run = detStatusRun(spark, sfDir)
-    spark.read.schema(run.schema).parquet(run.out)
-      .filter($"kind" === "status")
-      // keep-latest collapse of the per-batch snapshots (r15 — the shared
-      // statusStream runs ≥3 staged micro-batches and each batch with
-      // input for a key appends an UPDATED snapshot): n_events strictly
-      // grows per key per emission, so max(struct) is the final state —
-      // the streamKeyedState collapse verbatim, oracle unchanged.
-      .groupBy($"user_id")
-      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
-      .select($"user_id", $"s.n_events".as("n_events"),
-        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
-        $"s.event_type".as("event_type"))
-      .orderBy($"user_id")
+    latestStatus(spark.read.schema(run.schema).parquet(run.out)
+      .filter($"kind" === "status"))
   }
 
   /** A run whose outputs serve several queries: the sink at `out`, one
@@ -1569,10 +1511,7 @@ object Streaming {
     * index), and the sink schema (needed for a zero-finalized-rows
     * read-back). */
   private final case class StreamRun(out: String, states: Seq[String],
-      schema: org.apache.spark.sql.types.StructType) {
-    /** The first state read's dir, for single-read runs. */
-    def state: String = states.head
-  }
+      schema: org.apache.spark.sql.types.StructType)
 
   /** One read of a run's checkpoint: `format` is `statestore` for state
     * content or `state-metadata` for the checkpoint catalog, `opts` its
@@ -1618,8 +1557,7 @@ object Streaming {
     val key = s"$name#$sfDir"
     pairLocks.computeIfAbsent(key, _ => new Object).synchronized {
       Option(pairRuns.get(key)).getOrElse {
-        val dir = s"$ScratchRoot/$PairsDirName/" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
+        val dir = scratchDir(s"$PairsDirName/")
         new java.io.File(dir).mkdirs(): Unit
         val run = build(dir)
         pairRuns.put(key, run)
@@ -1737,13 +1675,9 @@ object Streaming {
   private def typeCountStream(child: SparkSession, sfDir: String): DataFrame = {
     import child.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    // det cuts since r19 (the merged det-status union's staging): the
-    // per-(user,type) counter census is cut-invariant — a commutative
-    // count fold — so the move off sampled staging changes no rows
-    stagedEventsStreamDet(child, sfDir, 3)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .as[KeyedEvent]
+    // the per-(user,type) counter census is cut-invariant — a
+    // commutative count fold
+    keyedEvents(stagedStream(child, stagedEvents(child, sfDir)))
       .groupByKey(_.user_id)
       .transformWithState(new TypeCountProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -1776,7 +1710,7 @@ object Streaming {
     * one ingest pipeline computing several per-key feature families in
     * one pass instead of re-reading the source per feature. */
   private def detTrioStream(child: SparkSession, sfDir: String): DataFrame = {
-    val status = statusStreamDet(child, sfDir)
+    val status = statusStream(stagedStream(child, stagedEvents(child, sfDir)))
       .select(lit("status").as("kind"), col("user_id"), col("event_type"),
         lit(0L).as("n"), lit(0L).as("rank"), lit(0L).as("event_id"),
         lit(0L).as("us"), col("n_events"), col("lastUs"))
@@ -1801,13 +1735,13 @@ object Streaming {
     * reader targets these five — their checkpoint needs no catalog
     * surface, so the det run's declared shape stays untouched. Every
     * consumer's result equals its standalone run's:
-    *  - quota keeps its det cuts verbatim (the order-sensitive fold's own
+    *  - quota reads the time cuts (the order-sensitive fold's own
     *    staging contract) — per-batch emissions are identical to a
     *    standalone run's;
     *  - the TTL'd store and the FMGWS twin fold commutative count+latest,
     *    so their keep-latest collapse (n strictly grows per key per
     *    emission ⇒ max(struct) = final census) is CUT-INVARIANT — the
-    *    same argument that puts typeCount/recent on det cuts;
+    *    same argument that serves typeCount/recent;
     *  - the init branch keeps its OWN source verbatim (the post-midpoint
     *    slice staged into 3 files of its own): file sources advance
     *    independently — each trigger takes the next file from EACH
@@ -1829,10 +1763,7 @@ object Streaming {
   private def auxUnionStream(child: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
     import child.implicits._
-    def keyedDet = stagedEventsStreamDet(child, sfDir, 3)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .as[KeyedEvent]
+    def events = stagedStream(child, stagedEvents(child, sfDir))
     // padding for the columns only some branches fill
     def padQuota = Seq(lit(0L).as("n"), lit(0L).as("n_batches"),
       lit(0L).as("residual_u6"))
@@ -1841,7 +1772,7 @@ object Streaming {
       lit(null).cast("decimal(18,6)").as("value"))
     def padCsv = Seq(lit(null).cast("string").as("ext_id"),
       lit(null).cast("string").as("err"))
-    val quota = stagedEventsStreamDet(child, sfDir, 3)
+    val quota = events
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"),
         round(col("value").cast("double") * 1e6).cast("long").as("u6"))
@@ -1856,7 +1787,7 @@ object Streaming {
         lit(null).cast("string").as("event_type"),
         col("n"), col("n_batches"), col("residual_u6")) ++
         padStatus ++ padStatic ++ padCsv: _*)
-    val ttl = keyedDet
+    val ttl = keyedEvents(events)
       .groupByKey(_.user_id)
       .transformWithState(new TtlStatusProcessor(java.time.Duration.ofHours(1)),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
@@ -1865,7 +1796,7 @@ object Streaming {
       .toDF()
       .select(Seq(lit("ttl").as("kind"), col("user_id"), col("event_type")) ++
         padQuota ++ Seq(col("n_events"), col("lastUs")) ++ padStatic ++ padCsv: _*)
-    val fmgws = keyedDet
+    val fmgws = keyedEvents(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[JobState, JobUpdate](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -1888,9 +1819,7 @@ object Streaming {
     val bounds = Tables.events(child, sfDir)
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
     val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val initState = Tables.events(child, sfDir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
+    val initState = keyedEvents(Tables.events(child, sfDir))
       .filter(col("us") <= mid)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
@@ -1904,19 +1833,9 @@ object Streaming {
     // (r16, judge item 1: staging the FULL table would land the whole
     // post-midpoint increment in the last file — the backfilled thirds
     // would stream as filtered-empty batches, multi-batch in name only)
-    val evSchema = child.read.parquet(s"$sfDir/events.parquet").schema
-    val initStaged = stageFrame(child, s"$sfDir#init#$mid#3",
-      child.read.parquet(s"$sfDir/events.parquet")
-        .withColumn("ts", Tables.normalizedTs(evSchema("ts").dataType))
-        .filter(unix_micros(col("ts")) > mid), 3)
-    val init = child.readStream
-      .schema(child.read.parquet(initStaged).schema)
-      .option("pathGlobFilter", "part-*")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(initStaged)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .as[KeyedEvent]
+    val initStaged = stageByTime(s"$sfDir#init#$mid#3",
+      Tables.events(child, sfDir).filter(unix_micros(col("ts")) > mid), 3)
+    val init = keyedEvents(stagedStream(child, initStaged))
       .groupByKey(_.user_id)
       .transformWithState(new InitStatusProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -1928,7 +1847,7 @@ object Streaming {
         padQuota ++ Seq(col("n_events"), col("lastUs")) ++ padStatic ++ padCsv: _*)
     val static = Tables.customer(child, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val joined = stagedEventsStreamDet(child, sfDir, 3)
+    val joined = events
       .select(col("user_id"), col("value"))
       .join(broadcast(static), col("user_id") === col("c_custkey"))
       .select(Seq(lit("static").as("kind"), col("user_id"),
@@ -2014,12 +1933,9 @@ object Streaming {
   private def recentStream(child: SparkSession, sfDir: String): DataFrame = {
     import child.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    // det cuts since r19 (see typeCountStream): the top-3-by-(us,id)
-    // fold is arrival-order-invariant, so the census is cut-invariant
-    stagedEventsStreamDet(child, sfDir, 3)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .as[KeyedEvent]
+    // the top-3-by-(us,id) fold is arrival-order-invariant, so the
+    // census is cut-invariant
+    keyedEvents(stagedStream(child, stagedEvents(child, sfDir)))
       .groupByKey(_.user_id)
       .transformWithState(new RecentProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -2085,14 +2001,8 @@ object Streaming {
     * watermark — and so the surviving buffer — equals the single-batch
     * run's. Scale: state O(open match windows) per side; the read is
     * partition-parallel over the store. */
-  def scanStateJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // both buffers of the quad run's single join operator (r19)
-    val run = clickPurchaseQuadRun(spark, sfDir)
-    spark.read.parquet(run.states(0))
-      .unionByName(spark.read.parquet(run.states(1)))
-      .orderBy($"side", $"user_id", $"event_id")
-  }
+  def scanStateJoin(spark: SparkSession, sfDir: String): DataFrame =
+    joinBuffers(spark, sfDir)
 
   /** [[scanStateJoin]] over the LEFT-OUTER attribution join's checkpoint
     * (r17, judge item 4): both join buffers of the run whose emitted side
@@ -2106,11 +2016,14 @@ object Streaming {
     * property. StreamingSpec's partition proof closes the loop in a
     * single run: emitted null-extensions ⊕ these unmatched survivors
     * partition the unmatched click set. */
-  def scanStateJoinLeft(spark: SparkSession, sfDir: String): DataFrame = {
+  def scanStateJoinLeft(spark: SparkSession, sfDir: String): DataFrame =
+    joinBuffers(spark, sfDir)
+
+  /** Both buffers of the quad run's single join operator (r19): the
+    * buffered survivor set is join-type-invariant, so the same two store
+    * reads serve [[scanStateJoin]] and [[scanStateJoinLeft]]. */
+  private def joinBuffers(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // both buffers of the quad run's single join operator (r19): the
-    // buffered survivor set is join-type-invariant, so the same two
-    // store reads serve this reader and scan_state_join identically
     val run = clickPurchaseQuadRun(spark, sfDir)
     spark.read.parquet(run.states(0))
       .unionByName(spark.read.parquet(run.states(1)))
@@ -2140,7 +2053,7 @@ object Streaming {
     // (partition_id rides in the read for the snapshot equality proof —
     // projected away here, r18)
     val run = tumblingRun(spark, sfDir)
-    spark.read.parquet(run.state)
+    spark.read.parquet(run.states(0))
       .select($"win_start", $"event_type", $"n", $"sum_value")
       .orderBy($"win_start", $"event_type")
   }
@@ -2188,7 +2101,7 @@ object Streaming {
     import spark.implicits._
     // buffered side of stream_dedup_state's own run (r15): one checkpoint
     val run = dedupRun(spark, sfDir)
-    spark.read.parquet(run.state).orderBy($"event_id")
+    spark.read.parquet(run.states(0)).orderBy($"event_id")
   }
 
   /** The ONE watermark-bounded dedup run `stream_dedup_state` (emitted,
@@ -2201,7 +2114,7 @@ object Streaming {
         date_format(timestamp_micros(col("value.expiresAtMicros")), tsFmt)
           .as("expires_at")))),
       minDataBatches = 3)(s =>
-      stagedEventsStream(s, sfDir, 3)
+      stagedStream(s, stagedEvents(s, sfDir))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id"))
 
@@ -2227,26 +2140,17 @@ object Streaming {
   }
 
 
-  /** The [[StatusProcessor]] fold over DETERMINISTIC time-cut batches
-    * ([[stageEventsByTime]]) — shared source of the batch-resolved state
-    * readers below and (r18) of the plain status consumers. */
-  private def statusStreamDet(child: SparkSession, sfDir: String): DataFrame = {
-    import child.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    val schema = child.read.parquet(s"$sfDir/events.parquet").schema
-    val staged = stageEventsByTime(child, sfDir, 3)
-    child.readStream.schema(schema)
-      .option("pathGlobFilter", "part-*")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .as[KeyedEvent]
+  /** The [[StatusProcessor]] fold over a staged events stream: the
+    * time-cut batches of the det-status run (the batch-resolved state
+    * readers below and, r18, the plain status consumers) and
+    * [[streamResume]]'s two legs. */
+  private def statusStream(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    keyedEvents(events)
       .groupByKey(_.user_id)
       .transformWithState(new StatusProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append(),
+        org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.Encoders.product[JobUpdate])
       .toDF()
   }
@@ -2286,8 +2190,8 @@ object Streaming {
     * emitted sink) are TEN consumers of the same checkpoint. The
     * status processor is operator 0 and the two collection processors
     * operators 1/2 ([[detTrioStream]]). The keep-latest collapses and
-    * final-fold censuses are batch-count-INVARIANT, so the deterministic
-    * time cuts serve them exactly as sampled cuts would. State partition
+    * final-fold censuses are batch-count-INVARIANT, so the time cuts the
+    * batch-resolved reads need serve them too. State partition
     * count is PINNED to 4 and no-data batches OFF in-operator, so the
     * catalog rows — and the batch range 0..2 the feed/asof reads address
     * — are a pure function of the query shape, not of the session or
@@ -2386,10 +2290,11 @@ object Streaming {
     *
     * Staging makes the "older snapshot" DETERMINISTIC on every board run:
     * the watermarked tumbling agg runs as TWO sequential AvailableNow
-    * legs over one checkpoint (4 time-contiguous files, 2 per leg), and
-    * between the legs [[org.apache.spark.sql.graft.StreamHygiene.maintainAndUnloadAll]]
+    * legs over one checkpoint (3 time-cut files, 2 in leg 1 and 1 in leg
+    * 2), and between the legs
+    * `StreamHygiene.maintainAndUnload(_ == TumWindowOperatorId.toLong)`
     * forces the maintenance pass that uploads a RocksDB full snapshot of
-    * the last leg-1 version (under changelog checkpointing commits upload
+    * the tumbling store's last leg-1 version (under changelog checkpointing commits upload
     * only changelogs — exactly why the snapshot must be forced, and why
     * leg 2's commits are changelog-only, so the replay path is genuinely
     * exercised). Every partition is then reconstructed from that leg-1
@@ -2425,20 +2330,11 @@ object Streaming {
     import spark.implicits._
     // TTL branch of the shared aux run (the run pins no-data
     // micro-batches OFF for this branch's ProcessingTime mode — see
-    // auxUnionStream), on det cuts: the fold is commutative
-    // count+latest, so the keep-latest collapse below is cut-invariant.
+    // auxUnionStream): the fold is commutative count+latest, so the
+    // keep-latest collapse is cut-invariant.
     val run = auxUnionRun(spark, sfDir)
-    spark.read.schema(run.schema).parquet(run.out)
-      .filter($"kind" === "ttl")
-      // keep-latest collapse (the streamTwsState recipe): n_events
-      // strictly grows per key per emission, so max(struct) is the final
-      // state snapshot — oracle unchanged
-      .groupBy($"user_id")
-      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
-      .select($"user_id", $"s.n_events".as("n_events"),
-        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
-        $"s.event_type".as("event_type"))
-      .orderBy($"user_id")
+    latestStatus(spark.read.schema(run.schema).parquet(run.out)
+      .filter($"kind" === "ttl"))
   }
 
   /** The keyed status store bootstrapped from a BATCH snapshot
@@ -2460,19 +2356,11 @@ object Streaming {
     // init branch of the shared aux run: the branch keeps its OWN
     // post-midpoint staged source and batch bootstrap — file sources in a
     // union advance independently, so its per-batch emissions are
-    // identical to a standalone run's
+    // identical to a standalone run's; the keep-latest collapse yields
+    // the final bootstrap+increment snapshot
     val run = auxUnionRun(spark, sfDir)
-    spark.read.schema(run.schema).parquet(run.out)
-      .filter($"kind" === "init")
-      // keep-latest collapse (the streamTwsState recipe): n_events
-      // strictly grows per key per emission, so max(struct) is the final
-      // bootstrap+increment snapshot — oracle unchanged
-      .groupBy($"user_id")
-      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
-      .select($"user_id", $"s.n_events".as("n_events"),
-        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
-        $"s.event_type".as("event_type"))
-      .orderBy($"user_id")
+    latestStatus(spark.read.schema(run.schema).parquet(run.out)
+      .filter($"kind" === "init"))
   }
 
   /** Per-user event-type counters on TWS MapState ([[TypeCountProcessor]]):
@@ -2578,7 +2466,7 @@ object Streaming {
     * batch/stream parity proof the incremental-ingest story needs. */
   def streamQuotaReset(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // quota branch of the shared aux run: det-cut staging (this
+    // quota branch of the shared aux run: time-cut staging (this
     // order-sensitive fold's own contract), rows tagged kind='quota' in
     // the shared union sink
     val run = auxUnionRun(spark, sfDir)
@@ -2715,53 +2603,30 @@ object Streaming {
     * dir itself, which other queries read concurrently within the
     * family. */
   def streamResume(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
     val dir = scratchDir()
     val child = streamChild(spark, rocksDb = true)
-    val path = s"$sfDir/events.parquet"
-    val schema = child.read.parquet(path).schema
     // staged layout off the shared pinned registry, hard-linked into this
     // run's own watched dir: the move-in-waves admission and batch
     // boundaries are those of the staged layout.
-    val parts = stageEvents(child, sfDir, 3)
-    new java.io.File(s"$dir/staged").mkdirs(): Unit
-    def admit(f: java.io.File): Unit = Streaming.admit(f, s"$dir/staged")
+    val watched = s"$dir/staged"
+    val parts = stagedFiles(stagedEvents(child, sfDir))
+    new java.io.File(watched).mkdirs(): Unit
     // each leg is a NEW query over the same checkpoint, and must process
-    // at least one data batch
-    def runLeg(): Unit = {
-      import child.implicits._
-      val out = child.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .parquet(s"$dir/staged")
-        .withColumn("ts", Tables.normalizedTs(schema("ts").dataType))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"), col("event_type"))
-        .as[KeyedEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new StatusProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append(),
-          org.apache.spark.sql.Encoders.product[JobUpdate])
-        .toDF()
-      runToEnd(out.writeStream.outputMode("append").format("parquet")
+    // at least one data batch; uncapped, leg 2 reads both of its files
+    // in one batch
+    def runLeg(): Unit =
+      runToEnd(statusStream(stagedStream(child, watched, oneFilePerTrigger = false))
+        .writeStream.outputMode("append").format("parquet")
         .option("path", s"$dir/out"), dir, minDataBatches = 1)
-    }
-    admit(parts.head)
+    admit(parts.head, watched)
     runLeg() // leg 1: first time-range only; state committed to the checkpoint
     // "driver loss": drop every in-memory provider — leg 2 can only
     // recover from the checkpoint (changelog replay over the snapshot)
     org.apache.spark.sql.graft.StreamHygiene.unloadStateStores()
-    parts.drop(1).foreach(admit)
+    parts.drop(1).foreach(admit(_, watched))
     runLeg() // leg 2: NEW query, same checkpoint — the fold must CONTINUE
     releaseCheckpoint(dir)
-    spark.read.parquet(s"$dir/out")
-      // keep-latest collapse across both legs (n strictly grows per key)
-      .groupBy($"user_id")
-      .agg(max(struct($"n_events", $"lastUs", $"event_type")).as("s"))
-      .select($"user_id", $"s.n_events".as("n_events"),
-        date_format(timestamp_micros($"s.lastUs"), tsFmt).as("last_ts"),
-        $"s.event_type".as("event_type"))
-      .orderBy($"user_id")
+    // keep-latest collapse across both legs (n strictly grows per key)
+    latestStatus(spark.read.parquet(s"$dir/out"))
   }
 }

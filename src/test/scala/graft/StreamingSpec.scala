@@ -1596,6 +1596,28 @@ class StreamingSpec extends SparkSuite {
     assert(!new java.io.File(root, "staged-inputs").exists())
   }
 
+  test("the batch-resolved and the batch-count-invariant runs share ONE staged events layout") {
+    Streaming.sweepAllScratch()
+    // scan_state_asof needs batch-resolved cuts; scan_state_dedup only
+    // needs contiguous ones — both stream `events` staged at 3 cuts
+    Streaming.scanStateAsof(spark, sfDir).collect()
+    Streaming.scanStateDedup(spark, sfDir).collect()
+    val layouts = Option(new java.io.File(Streaming.ScratchRoot, "staged-inputs")
+      .listFiles()).toSeq.flatten.filter(_.isDirectory)
+    assert(layouts.size == 1, s"one staged events layout, got ${layouts.map(_.getName)}")
+    Streaming.sweepAllScratch()
+  }
+
+  test("time-cut staging fails loud when a cut holds no event") {
+    // µs 0, 0 and 3 h: the cuts fall at 1 h and 2 h, so cut 1 is empty
+    val frame = Seq("2024-01-01 00:00:00", "2024-01-01 00:00:00", "2024-01-01 03:00:00")
+      .map(Timestamp.valueOf).toDF("ts")
+    val key = "empty-cut#" + java.util.UUID.randomUUID
+    val e = try intercept[RuntimeException](Streaming.stageByTime(key, frame, 3))
+      finally Streaming.sweepAllScratch()
+    assert(e.getMessage.contains("time cut 1 of 3 produced no part file"), e.getMessage)
+  }
+
   test("concurrent jobs: the first failure is logged while a sibling still runs, then rethrown") {
     val boom = new IllegalStateException("state read 1 failed")
     val log = new java.io.ByteArrayOutputStream()
