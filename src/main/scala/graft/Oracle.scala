@@ -4056,7 +4056,8 @@ object Oracle {
         |ORDER BY e.event_id""".stripMargin,
 
     "anomaly_mad" ->
-      """WITH e AS (SELECT event_type, event_id, value FROM events),
+      """WITH e AS (SELECT event_type, event_id, value FROM events
+        |  WHERE value IS NOT NULL),
         |r AS (SELECT event_type, event_id, value,
         |  row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
         |  COUNT(*) OVER (PARTITION BY event_type) AS cnt FROM e),

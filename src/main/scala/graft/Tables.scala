@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the harness star schema (TESTDATA.md).
   *
@@ -13,8 +16,44 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** The settings that change the schema Spark infers from parquet footers. */
+  private val SchemaConf = Seq("spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private val schemas = new ConcurrentHashMap[(String, Seq[(String, Long, Long)], Seq[String]), StructType]()
+
+  /** The schema Spark infers for the parquet table at `path`, inferred
+    * once: inference is a Spark job that reads a footer, and every load
+    * of a table would otherwise run it again. Cached by the table's
+    * absolute path, the path, length and modification time of each of
+    * its files, and the session's [[SchemaConf]], so a rewritten table is
+    * read again. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path).schema // fails as the reader does
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val key = (fs.makeQualified(p).toString, files.result().sorted,
+        SchemaConf.map(spark.conf.getOption(_).getOrElse("")))
+      Option(schemas.get(key)).getOrElse {
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, schema)
+        schema
+      }
+    }
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")

@@ -817,65 +817,66 @@ object Curation {
     * estimator z-scores can't give you: one wild value inflates mean AND
     * std (masking itself), while the median/MAD pair has a 50% breakdown
     * point. Flags `|v - med| > 3·1.4826·MAD` per event_type (1.4826 scales
-    * MAD to σ for normal data).
+    * MAD to σ for normal data). Null values are skipped: `n` counts the
+    * values the medians are taken over.
     *
-    * ONE distributed aggregation: the map-side-combinable
-    * (event_type, value) histogram is the only corpus-bound stage, and it
-    * is COLLECTED to the driver — a frame bounded by the value domain,
-    * not the row count (49k rows / ~1.5 MB at sf0.1). Every derived stage
-    * is exact driver arithmetic over it: both weighted medians (a distinct
-    * value covers positions [hi−c+1, hi] of the value-ascending
-    * histogram; the ≤2 middle positions are averaged), the deviation
-    * re-histogram and the outlier count. The collect grows with the value
-    * domain: swap in `approx_percentile(0.5)` when even the domain is
-    * unbounded and exactness isn't contractual. */
+    * Exact and distributed: one corpus aggregation builds the map-side-
+    * combinable (event_type, value) histogram, and [[rankedMedian]] takes
+    * each type's median from it; the deviation histogram is built from
+    * that ranked histogram, not the corpus, and gives the MAD and the
+    * outlier count the same way. No stage collects to the driver. The
+    * selection follows the middle-rank definition exactly — the ≤ 2
+    * distinct values holding positions (n+1) div 2 and n div 2 + 1 of the
+    * value-ascending histogram, averaged; dev = abs(value − med) in IEEE
+    * double; outlier cut dev > mad * 4.4478 — so med/mad/n/n_outliers
+    * match the oracle's row_number window SQL bit for bit. */
   def anomalyMad(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // Exactness: every driver step replicates the retired plan's
-    // EXPRESSIONS over the same inputs — cumulative-position middle
-    // selection ((n+1) div 2, n div 2 + 1 over the value-ascending
-    // histogram), avg of the ≤2 selected doubles as sum/size, dev =
-    // abs(value − med) in IEEE double, outlier cut dev > mad * 4.4478 —
-    // so med/mad/n/n_outliers are bit-identical and the final decimal
-    // casts below run in Spark exactly as before (CurationSpec pins the
-    // equality against the retired window-shaped plan on two SFs).
-    def wmed(hist: Seq[(Double, Long)]): Double = {
-      val sorted = hist.sortBy(_._1)
-      val n = sorted.iterator.map(_._2).sum
-      val p1 = (n + 1) / 2
-      val p2 = n / 2 + 1
-      var hi = 0L
-      val sel = Seq.newBuilder[Double]
-      sorted.foreach { case (v, c) =>
-        hi += c
-        val lo = hi - c + 1
-        if ((p1 >= lo && p1 <= hi) || (p2 >= lo && p2 <= hi)) sel += v
-      }
-      val s = sel.result()
-      s.sum / s.size
-    }
-    val hist = Tables.events(spark, sfDir)
-      .groupBy($"event_type", $"value").agg(count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-      .groupBy(_._1)
-    val out = hist.map { case (tpe, rows) =>
-      val vals = rows.map(r => (r._2, r._3)).toSeq
-      val med = wmed(vals)
-      val devs = vals.groupBy { case (v, _) => math.abs(v - med) }
-        .map { case (d, cs) => (d, cs.iterator.map(_._2).sum) }.toSeq
-      val mad = wmed(devs)
-      val n = vals.iterator.map(_._2).sum
-      val nOut = devs.iterator.collect {
-        case (d, c) if d > mad * 4.4478 => c
-      }.sum
-      (tpe, n, med, mad, nOut)
-    }.toSeq
-    out.toDF("event_type", "n", "med", "mad", "n_outliers")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (values, med) = rankedMedian(Tables.events(spark, sfDir)
+      .filter($"value".isNotNull)
+      .groupBy($"event_type", $"value".as("v")).agg(count(lit(1)).as("c")), parts)
+    val (devs, mad) = rankedMedian(values.join(broadcast(med), "event_type")
+      .groupBy($"event_type", abs($"v" - $"med").as("v")).agg(sum($"c").as("c")), parts)
+    devs.join(broadcast(mad.select($"event_type", $"med".as("mad"))), "event_type")
+      .groupBy($"event_type", $"mad")
+      .agg(sum(when($"v" > $"mad" * 4.4478, $"c").otherwise(0L)).as("n_outliers"))
+      .join(med, "event_type")
       .select($"event_type", $"n",
         $"med".cast("decimal(18,6)").as("med"),
         $"mad".cast("decimal(18,6)").as("mad"),
         $"n_outliers")
       .orderBy($"event_type")
+  }
+
+  /** The exact weighted median per `event_type` of a histogram
+    * (event_type, v, c), c the count of value v, distinct per type.
+    * Returns the histogram range-partitioned on (event_type, v) into
+    * `parts`, checkpointed with each row's partition id `pid` (so a row's
+    * partition is fixed however often it is read), and the frame
+    * (event_type, n, med). Two passes, none of them bounded by one
+    * partition or the driver: per (pid, event_type) weight totals — at
+    * most parts × types rows — give each type's n and each partition's
+    * starting position; running sums within each (pid, event_type) then
+    * give each distinct value's last position hi, and the values whose
+    * positions [hi − c + 1, hi] cover (n+1) div 2 or n div 2 + 1 are
+    * averaged. */
+  private def rankedMedian(hist: DataFrame, parts: Int): (DataFrame, DataFrame) = {
+    import hist.sparkSession.implicits._
+    val ranked = hist.repartitionByRange(parts, $"event_type", $"v")
+      .withColumn("pid", spark_partition_id())
+      .localCheckpoint()
+    val totals = ranked.groupBy($"pid", $"event_type").agg(sum($"c").as("t"))
+      .withColumn("start", sum($"t").over(
+        Window.partitionBy($"event_type").orderBy($"pid")) - $"t")
+      .withColumn("n", sum($"t").over(Window.partitionBy($"event_type")))
+      .drop("t")
+    val covers = (p: org.apache.spark.sql.Column) => p >= $"hi" - $"c" + 1 && p <= $"hi"
+    val med = ranked.join(broadcast(totals), Seq("pid", "event_type"))
+      .withColumn("hi", $"start" + sum($"c").over(
+        Window.partitionBy($"pid", $"event_type").orderBy($"v")))
+      .filter(covers(expr("(n + 1) div 2")) || covers(expr("n div 2 + 1")))
+      .groupBy($"event_type", $"n").agg(avg($"v").as("med"))
+    (ranked.drop("pid"), med)
   }
 }

@@ -24,10 +24,11 @@ import graft.Tables
   *
   * Scale: the classifier is one pass of per-row expressions (WholeStage
   * codegen, no shuffle); first-wins dedup is one hash shuffle on the key;
-  * the existing-keys anti-join broadcasts the small key set — the same
-  * shape the reference hand-optimized ("prefetch once, probe in memory",
-  * ItemRepository.java:11-17), which at 100 TB is exactly a broadcast
-  * anti-join.
+  * the existing-key test probes the small prefetched key set in memory —
+  * the shape the reference hand-optimized ("prefetch once, probe in
+  * memory", ItemRepository.java:11-17). The board's queries take it as a
+  * broadcast join of [[existingKeys]]; [[UploadService.Service]] holds the
+  * set once as a broadcast index and passes a probe of it.
   */
 object Ingest {
 
@@ -37,6 +38,11 @@ object Ingest {
   val ErrDup = "duplicate externalId"
   val ErrQty = "quantity invalid"
   val ErrDate = "expiryDate invalid (expected yyyy-MM-dd)"
+  /** Every reason the classifier can give, in its first-failure order. */
+  val Reasons: Seq[String] = Seq(ErrArity, ErrExtEmpty, ErrNameEmpty, ErrDup, ErrQty, ErrDate)
+
+  /** A raw cell as the classifier reads it: null → "", trimmed. */
+  def trimmed(raw: Column): Column = trim(coalesce(raw, lit("")))
 
   /** The corrupted CSV-upload staging, derived from orders. Columns:
     * line_id, external_id_raw, name_raw, quantity_raw, expiry_raw,
@@ -85,25 +91,35 @@ object Ingest {
 
   /** The full reference pipeline over ANY staged upload: `raw` must carry
     * (line_id, external_id_raw, name_raw, quantity_raw, expiry_raw,
-    * arity_ok); `existing` a single `external_id` column. Used by the
-    * parquet-derived oracle staging above and by the CSV fixtures in
-    * IngestSpec. */
-  def classifyStaged(raw: DataFrame, existing: DataFrame): DataFrame = {
+    * arity_ok); `existing` a single `external_id` column, broadcast-joined
+    * on the trimmed key. Used by the parquet-derived oracle staging above
+    * and by the CSV fixtures in IngestSpec. */
+  def classifyStaged(raw: DataFrame, existing: DataFrame): DataFrame =
+    classifyStaged(raw, (df: DataFrame) => {
+      import df.sparkSession.implicits._
+      df.join(broadcast(existing), $"ext" === $"external_id", "left_outer")
+        .withColumn("in_existing", $"external_id".isNotNull)
+        .drop("external_id")
+    })
+
+  /** Staging + trimmed cells + first-failure-wins `error` column (null =
+    * valid), with the existing-key test as a parameter: `markExisting`
+    * gets the frame with the trimmed key `ext` and adds a boolean
+    * `in_existing` column, true for a key already loaded. The dedup window
+    * partitions on `ext`, so a `raw` already hash-partitioned on
+    * `trimmed(external_id_raw)` adds no exchange for it. */
+  def classifyStaged(raw: DataFrame, markExisting: DataFrame => DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
-    val trimmed = raw
-      .withColumn("ext", trim(coalesce($"external_id_raw", lit(""))))
-      .withColumn("nam", trim(coalesce($"name_raw", lit(""))))
-      .withColumn("qty", trim(coalesce($"quantity_raw", lit(""))))
-      .withColumn("exp", trim(coalesce($"expiry_raw", lit(""))))
+    val trimmedCells = raw
+      .withColumn("ext", trimmed($"external_id_raw"))
+      .withColumn("nam", trimmed($"name_raw"))
+      .withColumn("qty", trimmed($"quantity_raw"))
+      .withColumn("exp", trimmed($"expiry_raw"))
     // seen-set eligibility: the reference adds a key to the seen set only
     // after arity/empty checks pass (BackgroundCsvProcessor.java:227-242)
     val eligible = $"arity_ok" && $"ext" =!= "" && $"nam" =!= ""
     val w = Window.partitionBy(eligible, $"ext").orderBy($"line_id")
-    val withDup = trimmed
-      .withColumn("rn", row_number().over(w))
-      .join(broadcast(existing), $"ext" === $"external_id", "left_outer")
-      .withColumn("in_existing", $"external_id".isNotNull)
-      .drop("external_id")
+    val withDup = markExisting(trimmedCells.withColumn("rn", row_number().over(w)))
     withDup.withColumn("error",
       when(!$"arity_ok", ErrArity)
         .when($"ext" === "", ErrExtEmpty)

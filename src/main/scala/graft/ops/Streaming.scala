@@ -1003,7 +1003,7 @@ object Streaming {
     * board, not just in MemoryStream specs. */
   private def stagedStream(session: SparkSession, dir: String,
                            oneFilePerTrigger: Boolean = true): DataFrame = {
-    val reader = session.readStream.schema(session.read.parquet(dir).schema)
+    val reader = session.readStream.schema(Tables.schemaOf(session, dir))
       .option("pathGlobFilter", "part-*")
     (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", "1")
      else reader).parquet(dir)

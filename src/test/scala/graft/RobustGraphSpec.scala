@@ -126,6 +126,23 @@ class RobustGraphSpec extends SparkSuite {
     assert(got == Seq(("a", 5L, 3.0, 1.0, 1L), ("b", 4L, 2.5, 1.0, 0L)))
   }
 
+  test("anomaly_mad: a null value is skipped, not a failure") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ev_null").toString
+    val us0 = 1700000000000000L
+    Seq[(Long, Long, Long, String, java.lang.Double)](
+      (1L, us0 + 1, 1L, "a", 1.0), (2L, us0 + 2, 1L, "a", null),
+      (3L, us0 + 3, 1L, "a", 3.0), (4L, us0 + 4, 1L, "a", 5.0))
+      .toDF("event_id", "us", "user_id", "event_type", "value")
+      .select($"event_id", ($"us" * 1000).as("ts"), $"user_id",
+        $"event_type", $"value")
+      .write.parquet(s"$dir/events.parquet")
+    val got = Curation.anomalyMad(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2).doubleValue,
+        r.getDecimal(3).doubleValue, r.getLong(4))).toSeq
+    // values 1, 3, 5 → med 3, devs 0, 2, 2 → mad 2
+    assert(got == Seq(("a", 3L, 3.0, 2.0, 0L)))
+  }
+
   test("ts_interpolate: straight line through the gap, NULL never invented at edges") {
     val bucketUs = 21600000000L
     val b0 = 1700006400000000L - (1700006400000000L % bucketUs)

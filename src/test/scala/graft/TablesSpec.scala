@@ -66,6 +66,21 @@ class TablesSpec extends SparkSuite {
     assert(e.getMessage.contains("unsupported parquet layout"))
   }
 
+  test("a table's schema is inferred once, and again after the table is rewritten") {
+    import spark.implicits._
+    val dir = writeFixture(Seq((1L, "a")).toDF("event_id", "props"))
+    val path = s"$dir/events.parquet"
+    val (first, firstJobs) = countJobs("tables-schema")(Tables.schemaOf(spark, path))
+    val (again, againJobs) = countJobs("tables-schema")(Tables.schemaOf(spark, path))
+    assert(first == again && first.fieldNames.toSeq == Seq("event_id", "props"))
+    assert(firstJobs >= 1 && againJobs == 0, s"jobs: $firstJobs, then $againJobs")
+    // a rewrite at the same path gives new files, so the schema is read again
+    Seq((1L, 2.5)).toDF("event_id", "value").write.mode("overwrite").parquet(path)
+    assert(Tables.schemaOf(spark, path).fieldNames.toSeq == Seq("event_id", "value"))
+    assert(spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+      .head().getDouble(1) == 2.5)
+  }
+
   test("schema contract: every harness table loads with the expected columns and types") {
     // The round-6 regression mode generalized: a harness testdata regen
     // that shifts ANY table's physical layout should fail HERE, by name,

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.concurrent.ExecutionContext
 import org.apache.spark.sql.functions._
 import graft.ops.{Sinks, UploadService}
 
@@ -85,6 +86,11 @@ class UploadServiceSpec extends SparkSuite {
     assert(svc.status("no-such-job").step == "NOT_FOUND")
   }
 
+  /** The data files of an output dir, in part-file order. */
+  private def partFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
   test("line ids follow file order even when the CSV reads as multiple splits") {
     val (csv, nClean, nBroken) = fixture()
     val out = Files.createTempDirectory("graft_upload_split").toString
@@ -97,15 +103,66 @@ class UploadServiceSpec extends SparkSuite {
         .rdd.getNumPartitions > 1)
       val svc = new UploadService.Service(spark,
         Seq.empty[String].toDF("external_id"), out)
-      val res = svc.await(svc.submit(csv))
+      val res = svc.await(svc.submit(csv, UploadService.AllOrNothing))
       assert(res.inserted == nClean && res.failed == nBroken)
+      // the Service itself read several splits: one job commit writes a
+      // part file per task
+      assert(partFiles(res.loadedDir).size > 1)
       // first-wins dedup is line-order dependent: the generator row on
       // line 1 must beat its duplicate on line 101 regardless of splits
       val kept = spark.read.parquet(res.loadedDir)
         .filter($"externalId" === "1000000000")
         .select($"name").head().getString(0)
       assert(kept.startsWith("Item_"), s"dup row won over the first row: $kept")
+      // the report, read in part-file order, is in line order
+      val report = partFiles(res.errorReportDir).flatMap(f =>
+        scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(f.toPath)).asScala)
+      assert(report == Seq(
+        "1000000000,DupOfFirst,5,2026-02-02,duplicate externalId",
+        "E900001,BadQty,notanint,2026-02-02,quantity invalid",
+        "E900002,BadDate,7,02/02/2026,expiryDate invalid (expected yyyy-MM-dd)",
+        "E900003,,8,2026-02-02,name empty"))
     } finally spark.conf.set(key, prev)
+  }
+
+  test("a single-split upload runs at most 4 Spark jobs") {
+    val (csv, nClean, nBroken) = fixture()
+    assert(spark.read.option("header", "true").csv(csv).rdd.getNumPartitions == 1)
+    val out = Files.createTempDirectory("graft_upload_jobs").toString
+    // tag the Service's jobs: they run on its own threads
+    val sc = spark.sparkContext
+    val tagging = new ExecutionContext {
+      def execute(r: Runnable): Unit = ExecutionContext.global.execute { () =>
+        sc.setLocalProperty(SparkSuite.JobTag, "upload")
+        try r.run() finally sc.setLocalProperty(SparkSuite.JobTag, null)
+      }
+      def reportFailure(t: Throwable): Unit = ExecutionContext.global.reportFailure(t)
+    }
+    val svc = new UploadService.Service(spark,
+      Seq.empty[String].toDF("external_id"), out)(tagging)
+    val (res, jobs) = countJobs("upload")(svc.await(svc.submit(csv, UploadService.AllOrNothing)))
+    assert(res.inserted == nClean && res.failed == nBroken)
+    assert(jobs <= 4, s"$jobs Spark jobs for one single-split upload")
+  }
+
+  test("the existing-key index is held: the Service sees existing as it was when built") {
+    val dir = Files.createTempDirectory("graft_upload_held").toString
+    val existingDir = s"$dir/existing.parquet"
+    Seq("H1", "H2").toDF("external_id").write.parquet(existingDir)
+    val out = Files.createTempDirectory("graft_upload_held_out").toString
+    val svc = new UploadService.Service(spark, spark.read.parquet(existingDir), out)
+    // the existing table's files are gone before the first upload
+    scala.reflect.io.Directory(new java.io.File(existingDir)).deleteRecursively()
+    val csv = s"$dir/upload.csv"
+    Files.write(Paths.get(csv), Seq("externalId,name,quantity,expiryDate",
+      "H1,Again,3,2026-03-03", "N1,Fresh,4,2026-03-03").mkString("", "\n", "\n").getBytes)
+    val jobId = svc.submit(csv, UploadService.AllOrNothing)
+    val res = svc.await(jobId)
+    assert(svc.status(jobId).step == "JOB_COMPLETE")
+    assert((res.processed, res.inserted, res.failed) == ((2L, 1L, 1L)))
+    assert(res.errorCounts == Map("duplicate externalId" -> 1L))
+    assert(spark.read.text(res.errorReportDir).collect().map(_.getString(0)).toSeq ==
+      Seq("H1,Again,3,2026-03-03,duplicate externalId"))
   }
 
   test("empty cells are nullable values, not missing columns; report lines keep raw cells") {
