@@ -19,12 +19,31 @@ object Bench {
     * AND between the alone lane's cold and warm timings — r10 measured the
     * stateless single-scan `profile_corr_matrix` at 1.99 s cold vs 6.97 s
     * "warm" when warm started immediately after cold, which impeached the
-    * lane, not the query. */
-  private def settle(): Unit = {
+    * lane, not the query. ScaleProbe settles between its lanes with it
+    * too. */
+  private[graft] def settle(): Unit = {
     System.gc()
     Thread.sleep(50)
     System.gc()
   }
+
+  /** The round a run's numbered snapshot belongs to. SPARK_GRAFT_ROUND
+    * pins it exactly (r18 advice: the max(BENCH_r*)+1 heuristic mislabels
+    * a re-run DURING round N as r{N+1} once BENCH_r{N}.json exists); the
+    * heuristic stays as the fallback for runs outside a driver round, and
+    * with neither there is no round. A malformed env value falls through
+    * to the heuristic instead of aborting the snapshot write (r18 advice:
+    * `.map(_.toInt)` threw and skipped the BENCH_r* fallback too). */
+  private[graft] def round(): Option[Int] =
+    sys.env.get("SPARK_GRAFT_ROUND")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).orElse {
+        val rs = Option(new java.io.File(".").listFiles).toSeq.flatten
+          .map(_.getName).collect {
+            case s if s.matches("BENCH_r\\d+\\.json") =>
+              s.stripPrefix("BENCH_r").stripSuffix(".json").toInt
+          }
+        rs.maxOption.map(_ + 1)
+      }
 
   /** Host-load snapshot for noise attribution (r17, judge item 3): eight
     * same-code r16 boards spanned 336.6–492.0 s — a ±40% band that
@@ -113,7 +132,7 @@ object Bench {
       // timed window (the r3 lesson: text_repetition 7.8 s shared vs
       // 0.59 s alone under no hygiene at all); Residue.freeAll() now
       // also drops localCheckpoint blocks, which clearCache never freed.
-      val fam = name.takeWhile(_ != '_')
+      val fam = SparkEntry.family(name)
       if (fam != prevFam) {
         ops.Residue.familyBoundary(spark)
         prevFam = fam
@@ -142,7 +161,7 @@ object Bench {
     // in bench_detail.json.
     val detail = results.map { case (k, v, _) => s"\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    val fams = results.groupBy(_._1.takeWhile(_ != '_')).toSeq.sortBy(_._1)
+    val fams = results.groupBy(r => SparkEntry.family(r._1)).toSeq.sortBy(_._1)
       .map { case (f, rs) => s"\"" + f + "\":" + ms(rs.map(_._2).sum) }
       .mkString("{", ",", "}")
     // Shared-pass load window, NAMED for its span (r18 advice: the
@@ -235,21 +254,12 @@ object Bench {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detailJson)
     // Per-round snapshot (r9 judge ask): bench_detail.json is overwritten
-    // every run, so round-over-round per-query diffs were impossible. The
-    // round number is inferred from the newest driver artifact BENCH_r{N}
-    // (this run becomes round N+1). Full-board runs only — a
-    // SPARK_GRAFT_ONLY dev subset must not masquerade as the round's
-    // board; dev runs without artifacts skip it too.
-    try if (only.isEmpty) {
-      val rs = Option(new java.io.File(".").listFiles).toSeq.flatten
-        .map(_.getName).flatMap {
-          case s if s.matches("BENCH_r\\d+\\.json") =>
-            Some(s.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-          case _ => None
-        }
-      if (rs.nonEmpty) java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"bench_detail_r${rs.max + 1}.json"), detailJson)
-    } catch { case _: Throwable => () }
+    // every run, so round-over-round per-query diffs were impossible.
+    // Full-board runs only — a SPARK_GRAFT_ONLY dev subset must not
+    // masquerade as the round's board; runs with no [[round]] skip it too.
+    try if (only.isEmpty) round().foreach(r => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"bench_detail_r$r.json"), detailJson): Unit)
+    catch { case _: Throwable => () }
     // Full driver-contract line (r20, r19 verdict item 2): the contract
     // names a per-query `queries` map inside the summary JSON, but the
     // harness keeps only the LAST ~2000 chars of stdout and the 335-entry

@@ -172,8 +172,6 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
   }
 
-  private def settle(): Unit = { System.gc(); Thread.sleep(50); System.gc() }
-
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.cpus(
@@ -222,7 +220,7 @@ object ScaleProbe {
         val timed = dirs.map { case (_, dir) =>
           ops.Residue.familyBoundary(spark)
           ops.Streaming.sweepAllScratch()
-          settle()
+          Bench.settle()
           val t0 = System.nanoTime()
           val rows = fn(spark, dir).count()
           ((System.nanoTime() - t0) / 1e9, rows)
@@ -254,27 +252,10 @@ object ScaleProbe {
       s"""{"metric":"scaleprobe","base":"$baseJ","factor":$factor,"flag_ratio":${flagRatio(factor)},"queries":$detail,"flagged":$flagged,"errors":$errs}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("SCALEPROBE.json"), json)
-    // Round-numbered snapshot. SPARK_GRAFT_ROUND pins it exactly (r18
-    // advice: the max(BENCH_r*)+1 heuristic mislabels a re-run DURING
-    // round N as r{N+1} once BENCH_r{N}.json exists); the heuristic
-    // stays as the fallback for runs outside a driver round.
-    try {
-      // Malformed env values fall through to the heuristic instead of
-      // aborting the whole snapshot write via the outer catch-all (r18
-      // advice: .map(_.toInt) threw and skipped the BENCH_r* fallback too).
-      val round = sys.env.get("SPARK_GRAFT_ROUND")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption).orElse {
-        val rs = Option(new java.io.File(".").listFiles).toSeq.flatten
-          .map(_.getName).flatMap {
-            case s if s.matches("BENCH_r\\d+\\.json") =>
-              Some(s.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-            case _ => None
-          }
-        if (rs.nonEmpty) Some(rs.max + 1) else None
-      }
-      round.foreach(r => java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"SCALEPROBE_r$r.json"), json): Unit)
-    } catch { case _: Throwable => () }
+    // Round-numbered snapshot ([[Bench.round]]).
+    try Bench.round().foreach(r => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"SCALEPROBE_r$r.json"), json): Unit)
+    catch { case _: Throwable => () }
     println(json)
     spark.stop()
   }

@@ -34,6 +34,11 @@ object SparkEntry {
     }.toIndexedSeq: _*)
   }
 
+  /** A query's board family: its name up to the first `_`. Bench and
+    * Verify run the queries family by family, with cache and checkpoint
+    * hygiene at each family boundary. */
+  private[graft] def family(name: String): String = name.takeWhile(_ != '_')
+
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Every query first installs [[org.apache.spark.sql.graft.GraftExtensions]]

@@ -1,9 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.ops.Once
 
 /** Parquet table loaders for the harness star schema (TESTDATA.md).
   *
@@ -26,14 +26,14 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong")
 
-  private val schemas = new ConcurrentHashMap[(String, Seq[(String, Long, Long)], Seq[String]), StructType]()
+  private val schemas = new Once[(String, Seq[(String, Long, Long)], Seq[String]), StructType]
 
   /** The schema Spark infers for the parquet table at `path`, inferred
     * once: inference is a Spark job that reads a footer, and every load
     * of a table would otherwise run it again. Cached by the table's
     * absolute path, the path, length and modification time of each of
     * its files, and the session's [[SchemaConf]], so a rewritten table is
-    * read again. */
+    * read again; two concurrent first loads of a table infer it once. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -47,11 +47,7 @@ object Tables {
       }
       val key = (fs.makeQualified(p).toString, files.result().sorted,
         SchemaConf.map(spark.conf.getOption(_).getOrElse("")))
-      Option(schemas.get(key)).getOrElse {
-        val schema = spark.read.parquet(path).schema
-        schemas.put(key, schema)
-        schema
-      }
+      schemas.get(key)(spark.read.parquet(path).schema)
     }
   }
 

@@ -21,7 +21,7 @@ object Verify {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      val fam = name.takeWhile(_ != '_')
+      val fam = SparkEntry.family(name)
       if (fam != prevFam) {
         ops.Residue.familyBoundary(spark)
         prevFam = fam

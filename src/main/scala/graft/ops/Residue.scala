@@ -105,8 +105,15 @@ object Residue {
     * whatever the previous invocation of this key left behind — BEFORE
     * materializing the new blocks, so peak storage is one snapshot. */
   def swap(key: String, df: DataFrame): DataFrame = {
+    frames.remove(key)
+    checkpoint(key, df)
+  }
+
+  /** [[swap]] without dropping `key`'s [[swapOnce]] entry — the build a
+    * [[swapOnce]] registers under that entry. */
+  private def checkpoint(key: String, df: DataFrame): DataFrame = {
     purgeDead()
-    free(key)
+    unhold(key)
     val cp = df.localCheckpoint()
     val mine = rddsOf(cp)
     held.put(key, Blocks(mine.filterNot(r => ownedIds(r.id)),
@@ -117,18 +124,11 @@ object Residue {
   /** Frames handed out by [[swapOnce]], so same-key consumers inside one
     * family share ONE materialization instead of re-checkpointing the
     * identical subtree per query. Dropped with the blocks on
-    * free/freeAll. */
-  private val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Per-key build monitors for [[swapOnce]] (r20, r19 advice item 1):
-    * the get-or-build was a non-atomic check-then-act — two concurrent
-    * first callers would both miss and both swap, the second swap's
-    * free(key) unpersisting the first caller's just-returned checkpoint
-    * blocks (unrecomputable) mid-query. The [[Streaming]] pairLocks
-    * discipline: distinct keys build concurrently, one key never builds
-    * twice. */
-  private val onceLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    * free/freeAll. A [[Once]] (r20, r19 advice item 1): two concurrent
+    * first callers of a key must not both checkpoint, or the second
+    * build's free of the key would unpersist the first caller's
+    * just-returned blocks (unrecomputable) mid-query. */
+  private val frames = new Once[String, DataFrame]
 
   /** Get-or-build: return the frame a previous [[swapOnce]] of this key
     * registered (if its context is still live), else checkpoint `df` and
@@ -137,23 +137,14 @@ object Residue {
     * re-materialized the same co-occurrence edge set); lifetime is
     * unchanged — the family boundary's [[freeAll]] drops the entry.
     * A cached frame from a since-replaced SparkContext is rebuilt (the
-    * prev-context check below); a cached frame from a DIFFERENT still-live
+    * `keep` check below); a cached frame from a DIFFERENT still-live
     * session of the SAME context is fine — localCheckpoint blocks are
     * context-scoped, and every current caller (Bench, Verify, Explain)
     * hands queries one session at a time. */
   def swapOnce(key: String, df: => DataFrame): DataFrame = {
-    val lock = onceLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      purgeDead()
-      val prev = frames.get(key)
-      if (prev != null && held.containsKey(key) &&
-          !prev.sparkSession.sparkContext.isStopped) prev
-      else {
-        val cp = swap(key, df)
-        frames.put(key, cp)
-        cp
-      }
-    }
+    purgeDead()
+    frames.get(key, keep = prev => held.containsKey(key) &&
+        !prev.sparkSession.sparkContext.isStopped)(checkpoint(key, df))
   }
 
   /** Register an already-materialized frame (e.g. the surviving label
@@ -201,12 +192,16 @@ object Residue {
     * leaked (the borrower, now owner, frees it on its own free). */
   def free(key: String): Unit = {
     frames.remove(key)
+    unhold(key)
+  }
+
+  /** [[free]]'s block release, leaving the [[swapOnce]] entry alone. */
+  private def unhold(key: String): Unit =
     Option(held.remove(key)).foreach { entry =>
       val (borrowed, freeable) = entry.rdds.partition(r => embeddedElsewhere(r.id))
       borrowed.foreach(adopt)
       release(Blocks(freeable, Set.empty), keep = Set.empty)
     }
-  }
 
   /** Drop every registered frame — the query-family / session boundary. */
   def freeAll(): Unit = {

@@ -916,8 +916,7 @@ object Streaming {
     * registry in the same breath — the stage-once / consume-many shape
     * shared input staging has in production, and ~1 s per consumer saved
     * locally. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedDirs = new Once[String, String]
 
   /** Stage an events-shaped `frame` (ts already normalised by
     * [[Tables.events]]) into `parts` TIME-CUT, mtime-ordered parquet
@@ -940,7 +939,7 @@ object Streaming {
     * greedy quota reset) folds in the global (us, event_id) order. */
   private[graft] def stageByTime(key: String, frame: => DataFrame,
                                  parts: Int): String =
-    stagedDirs.computeIfAbsent(key, _ => {
+    stagedDirs.get(key) {
       val dir = scratchDir(s"$StagedDirName/")
       val ev = frame
       val us = unix_micros(col("ts"))
@@ -984,7 +983,7 @@ object Streaming {
           s"mtime stamp failed for $dst")
       }
       s"$dir/staged"
-    })
+    }
 
   /** `events` staged into `parts` time cuts ([[stageByTime]]). */
   private def stagedEvents(session: SparkSession, sfDir: String,
@@ -1528,17 +1527,7 @@ object Streaming {
 
   private val PairsDirName = "pairs"
 
-  private val pairRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, StreamRun]()
-
-  /** Per-run build locks: a run takes seconds, and building it inside
-    * `ConcurrentHashMap.computeIfAbsent` would hold the bin lock for that
-    * whole duration (a reentrant or concurrent build risks deadlock /
-    * IllegalStateException under the computeIfAbsent recursive-update
-    * contract). The run is built under a plain per-run monitor instead;
-    * distinct runs build concurrently, one run never builds twice. */
-  private val pairLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val pairRuns = new Once[String, StreamRun]
 
   /** The run-once registry: `build` runs at most once per (name, sfDir)
     * until [[resetPairRuns]], in a fresh dir under the pinned `pairs/`
@@ -1553,18 +1542,12 @@ object Streaming {
     * family-boundary sweeps in between; [[sweepAllScratch]] reclaims them
     * at pass end. */
   private def runOnce(name: String, sfDir: String)
-                     (build: String => StreamRun): StreamRun = {
-    val key = s"$name#$sfDir"
-    pairLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      Option(pairRuns.get(key)).getOrElse {
-        val dir = scratchDir(s"$PairsDirName/")
-        new java.io.File(dir).mkdirs(): Unit
-        val run = build(dir)
-        pairRuns.put(key, run)
-        run
-      }
+                     (build: String => StreamRun): StreamRun =
+    pairRuns.get(s"$name#$sfDir") {
+      val dir = scratchDir(s"$PairsDirName/")
+      new java.io.File(dir).mkdirs(): Unit
+      build(dir)
     }
-  }
 
   /** A [[runOnce]] run of `build`'s stream on a RocksDB child session:
     * run it to `$dir/out`, check the multi-batch contract, perform each
@@ -1611,16 +1594,14 @@ object Streaming {
     * streaming job, not read the cold run's cached parquet.
     *
     * SINGLE-THREADED BY CONTRACT: reset must not race a concurrent
-    * [[runOnce]]. A build holding a pre-reset lock could finish its run
-    * AFTER this cleared the maps and deleted `pairs/`, registering a
-    * StreamRun whose dir no longer exists. Every current caller (the
-    * bench shared pass / alone lane, Verify, sweepAllScratch) runs
+    * [[runOnce]]. A build in flight is not registered after the reset
+    * ([[Once]]), but it writes under `pairs/` while this deletes it, so
+    * its own caller could read a half-deleted run. Every current caller
+    * (the bench shared pass / alone lane, Verify, sweepAllScratch) runs
     * queries strictly sequentially, so no such build can be in flight;
-    * a concurrent driver must quiesce builds (e.g. synchronize on every
-    * live [[pairLocks]] monitor) before calling this. */
+    * a concurrent driver must quiesce its stream queries first. */
   def resetPairRuns(): Unit = {
     pairRuns.clear()
-    pairLocks.clear()
     deleteRec(new java.io.File(s"$ScratchRoot/$PairsDirName"))
   }
 
@@ -2598,7 +2579,7 @@ object Streaming {
     * is the stop/upgrade/resume operational path of a 100 TB streaming
     * deployment (deploys happen mid-stream; state must not).
     *
-    * Own watched dir (the shared [[stagedDirs]] layout's files are
+    * Own watched dir (the shared [[stageByTime]] layout's files are
     * admitted into it between the legs) rather than the shared layout's
     * dir itself, which other queries read concurrently within the
     * family. */

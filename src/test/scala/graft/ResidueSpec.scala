@@ -57,6 +57,33 @@ class ResidueSpec extends SparkSuite {
     assert(!persistedRddIds.contains(id))
   }
 
+  test("swapOnce: concurrent first callers build once, later calls reuse, free forces a rebuild") {
+    val key = "residue_spec.once"
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def df = { builds.incrementAndGet(); spark.range(40).toDF("id") }
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(
+        new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+          def call() = { gate.await(); Residue.swapOnce(key, df) }
+        }))
+      gate.countDown()
+      val got = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == 1, "one key must build once")
+      assert(got.forall(_ eq got.head))
+      assert(persistedRddIds.contains(checkpointRddId(got.head)))
+      assert(Residue.swapOnce(key, df) eq got.head)
+      Residue.free(key)
+      val again = Residue.swapOnce(key, df)
+      assert(builds.get == 2 && checkpointRddId(again) != checkpointRddId(got.head))
+      assert(again.count() == 40)
+    } finally {
+      pool.shutdown()
+      Residue.free(key)
+    }
+  }
+
   test("free on an unknown key is a no-op") {
     Residue.free("residue_spec.never_registered")
   }

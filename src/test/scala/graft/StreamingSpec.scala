@@ -1608,14 +1608,49 @@ class StreamingSpec extends SparkSuite {
     Streaming.sweepAllScratch()
   }
 
+  /** Events at 0 h, 1.5 h and 3 h: one event in each of 3 time cuts. */
+  private def threeCuts = Seq("2024-01-01 00:00:00", "2024-01-01 01:30:00",
+    "2024-01-01 03:00:00").map(Timestamp.valueOf).toDF("ts")
+
+  private def stagedParts(dir: String): Int =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
+      .count(_.getName.startsWith("part-"))
+
   test("time-cut staging fails loud when a cut holds no event") {
     // µs 0, 0 and 3 h: the cuts fall at 1 h and 2 h, so cut 1 is empty
     val frame = Seq("2024-01-01 00:00:00", "2024-01-01 00:00:00", "2024-01-01 03:00:00")
       .map(Timestamp.valueOf).toDF("ts")
     val key = "empty-cut#" + java.util.UUID.randomUUID
-    val e = try intercept[RuntimeException](Streaming.stageByTime(key, frame, 3))
-      finally Streaming.sweepAllScratch()
-    assert(e.getMessage.contains("time cut 1 of 3 produced no part file"), e.getMessage)
+    try {
+      val e = intercept[RuntimeException](Streaming.stageByTime(key, frame, 3))
+      assert(e.getMessage.contains("time cut 1 of 3 produced no part file"), e.getMessage)
+      // the failed build registered nothing: the next call stages afresh
+      assert(stagedParts(Streaming.stageByTime(key, threeCuts, 3)) == 3)
+    } finally Streaming.sweepAllScratch()
+  }
+
+  test("staging: a key whose build blocks does not hold up a key in the same hash bin") {
+    // "Aa" and "BB" have equal String.hashCode, so the keys share a bin
+    val id = java.util.UUID.randomUUID
+    val (slow, fast) = (s"Aa#$id", s"BB#$id")
+    assert(slow.hashCode == fast.hashCode)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val first = new Thread(() => Streaming.stageByTime(slow,
+      { entered.countDown(); release.await(); threeCuts }, 3): Unit)
+    first.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val second = scala.concurrent.Future(Streaming.stageByTime(fast, threeCuts, 3))(
+        scala.concurrent.ExecutionContext.global)
+      val dir = scala.concurrent.Await.result(second,
+        scala.concurrent.duration.Duration(60, "s"))
+      assert(stagedParts(dir) == 3)
+    } finally {
+      release.countDown()
+      first.join()
+      Streaming.sweepAllScratch()
+    }
   }
 
   test("concurrent jobs: the first failure is logged while a sibling still runs, then rethrown") {
