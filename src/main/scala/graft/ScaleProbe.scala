@@ -158,7 +158,7 @@ object ScaleProbe {
     // bit-for-bit while cross-replica cosines collapse toward 0 — ten
     // statistically independent clouds with identical internal geometry.
     // Labels are NOT offset: label blocks genuinely grow ×10, so the
-    // label-skew router (withPairRoute/maxExactLabel), not the data, has
+    // label-skew router (withPairRoute/MaxExactLabel), not the data, has
     // to keep the exact pair tier bounded — that is the claim under test.
     val emb = spark.read.parquet(s"$base/embeddings.parquet")
     emb.crossJoin(reps).select(

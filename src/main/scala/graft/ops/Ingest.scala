@@ -195,10 +195,10 @@ object Ingest {
     import spark.implicits._
     itemsRaw(spark, sfDir).select(
       $"line_id",
-      trim(coalesce($"external_id_raw", lit(""))).as("ext"),
-      trim(coalesce($"name_raw", lit(""))).as("nam"),
-      trim(coalesce($"quantity_raw", lit(""))).as("qty"),
-      trim(coalesce($"expiry_raw", lit(""))).as("exp"))
+      trimmed($"external_id_raw").as("ext"),
+      trimmed($"name_raw").as("nam"),
+      trimmed($"quantity_raw").as("qty"),
+      trimmed($"expiry_raw").as("exp"))
       .orderBy($"line_id")
   }
 
@@ -214,11 +214,11 @@ object Ingest {
     import spark.implicits._
     itemsRaw(spark, sfDir)
       .filter($"arity_ok" &&
-        (trim(coalesce($"external_id_raw", lit(""))) === "" ||
-         trim(coalesce($"name_raw", lit(""))) === ""))
+        (trimmed($"external_id_raw") === "" ||
+         trimmed($"name_raw") === ""))
       .select($"line_id",
-        trim(coalesce($"external_id_raw", lit(""))).as("ext"),
-        trim(coalesce($"name_raw", lit(""))).as("nam"))
+        trimmed($"external_id_raw").as("ext"),
+        trimmed($"name_raw").as("nam"))
       .orderBy($"line_id")
   }
 
@@ -227,7 +227,7 @@ object Ingest {
     import spark.implicits._
     itemsRaw(spark, sfDir)
       .select($"line_id",
-        trim(coalesce($"quantity_raw", lit(""))).as("qty"))
+        trimmed($"quantity_raw").as("qty"))
       .select($"line_id", $"qty",
         expr("try_cast(qty AS INT)").as("qty_int"),
         ($"qty" =!= "" && expr("try_cast(qty AS INT)").isNull).as("invalid"))
@@ -238,7 +238,7 @@ object Ingest {
   def castDateValidate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     itemsRaw(spark, sfDir)
-      .select($"line_id", trim(coalesce($"expiry_raw", lit(""))).as("exp"))
+      .select($"line_id", trimmed($"expiry_raw").as("exp"))
       .select($"line_id", $"exp",
         date_format(try_to_date($"exp", "yyyy-MM-dd"), "yyyy-MM-dd").as("parsed"),
         ($"exp" =!= "" && try_to_date($"exp", "yyyy-MM-dd").isNull).as("invalid"))
@@ -264,7 +264,7 @@ object Ingest {
   def dedupAntiExisting(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     itemsRaw(spark, sfDir)
-      .withColumn("ext", trim(coalesce($"external_id_raw", lit(""))))
+      .withColumn("ext", trimmed($"external_id_raw"))
       .join(broadcast(existingKeys(spark, sfDir)),
         $"ext" === $"external_id", "left_anti")
       .select($"line_id", $"ext")
@@ -277,7 +277,7 @@ object Ingest {
     import spark.implicits._
     val w = Window.partitionBy($"ext").orderBy($"line_id")
     itemsRaw(spark, sfDir)
-      .withColumn("ext", trim(coalesce($"external_id_raw", lit(""))))
+      .withColumn("ext", trimmed($"external_id_raw"))
       .filter($"ext" =!= "")
       .withColumn("rn", row_number().over(w))
       .select($"line_id", $"ext", $"rn", ($"rn" === 1).as("kept"))
@@ -295,7 +295,7 @@ object Ingest {
     import spark.implicits._
     val w = Window.partitionBy($"ext").orderBy($"line_id")
     itemsRaw(spark, sfDir)
-      .withColumn("ext", trim(coalesce($"external_id_raw", lit(""))))
+      .withColumn("ext", trimmed($"external_id_raw"))
       .filter($"ext" =!= "")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)

@@ -41,11 +41,9 @@ object Similarity {
   private def vecd(c: Column): Column = c.cast("array<double>")
 
   /** Per-label row cap above which the exact pair tiers switch to bucketed
-    * pairing (see [[withPairRoute]]). Defaults far above any declared-query
-    * label (oracle output unchanged); tunable per job. */
-  private[graft] def maxExactLabel(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.maxExactLabel")
-      .map(_.toLong).getOrElse(100000L)
+    * pairing (see [[withPairRoute]]). Far above any declared-query label,
+    * so the oracle output is the plain exact join. */
+  private[graft] val MaxExactLabel = 100000L
 
   /** Skew-threshold router for the exact pair tiers (simKnnPerLabel /
     * dedupEmbeddingCosine): within-label pair joins are quadratic in the
@@ -367,7 +365,7 @@ object Similarity {
       Tables.embeddings(spark, sfDir)
         .select($"vec_id", $"label", vecd($"embedding").as("v"))
         .withColumn("nrm", sqrt(dot($"v", $"v"))),
-      maxExactLabel(spark))
+      MaxExactLabel)
     val a = e.as("a")
     val b = e.as("b")
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
@@ -955,7 +953,7 @@ object Similarity {
     val raw = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", vecd($"embedding").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
-    val pairs = cosineCellCandidates(raw, maxExactLabel(spark),
+    val pairs = cosineCellCandidates(raw, MaxExactLabel,
         cacheKey = Some(sfDir))
       .select($"id_a", $"id_b", $"label",
         (dot($"va", $"vb") / ($"na" * $"nb")).cast("decimal(18,6)").as("cos"))
@@ -1269,10 +1267,11 @@ object Similarity {
     * over-delete: a~b and b~c must collapse to ONE kept doc, not two
     * independent pair decisions).
     *
-    * Distributed min-label propagation: every vertex repeatedly adopts
-    * the smallest cluster id among itself and its neighbors until a
-    * fixpoint — each round is one shuffle join + min-aggregate, all
-    * executor-side; the driver only checks the convergence count.
+    * Distributed min-label propagation ([[propagateLabels]]): every
+    * vertex repeatedly adopts the smallest cluster id among itself and
+    * its neighbors until a fixpoint — each round is one shuffle join +
+    * min-aggregate, all executor-side; the driver only checks the
+    * convergence count.
     * Rounds = graph diameter, and near-dup graphs are short chains
     * (diameter ≤ a handful); at 100 TB the standard upgrade is the
     * small-star/large-star contraction (O(log n) rounds) with the same
@@ -1344,16 +1343,29 @@ object Similarity {
     val pairs =
       if (reliable) Residue.track("dedup_cluster.pairs", pairsBase.checkpoint())
       else Residue.swap("dedup_cluster.pairs", pairsBase)
-    if (spark.conf.getOption("spark.graft.cluster.algo")
-        .contains("starcontract")) {
-      val (labels, _) = starContract(pairs, truncateLineage, freeCheckpoint)
-      return Tables.documents(spark, sfDir).select($"doc_id")
-        .join(Residue.track("dedup_cluster.labels", labels),
-          Seq("doc_id"), "left_outer")
-        .select($"doc_id", coalesce($"cluster", $"doc_id").as("cluster"))
-        .select($"doc_id", $"cluster", ($"doc_id" === $"cluster").as("kept"))
-        .orderBy($"doc_id")
-    }
+    val (labels, _) =
+      if (spark.conf.getOption("spark.graft.cluster.algo").contains("starcontract"))
+        starContract(pairs, truncateLineage, freeCheckpoint)
+      else propagateLabels(pairs, truncateLineage, freeCheckpoint)
+    Tables.documents(spark, sfDir).select($"doc_id")
+      .join(Residue.track("dedup_cluster.labels", labels),
+        Seq("doc_id"), "left_outer")
+      .select($"doc_id", coalesce($"cluster", $"doc_id").as("cluster"))
+      .select($"doc_id", $"cluster", ($"doc_id" === $"cluster").as("kept"))
+      .orderBy($"doc_id")
+  }
+
+  /** [[dedupCluster]]'s default fixpoint: pointer-jumped min-label
+    * propagation over the symmetric pair graph, O(log d) rounds for
+    * component diameter d, capped at 30. Each round's labels go through
+    * `truncate`, and the previous round's through `free` once the next
+    * is materialized. Returns (labels for non-isolated vertices, rounds),
+    * the shape of [[starContract]]. */
+  private[graft] def propagateLabels(pairs: DataFrame,
+      truncate: DataFrame => DataFrame,
+      free: DataFrame => Unit): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = pairs
       .union(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
     // Iterate ONLY over vertices that appear in the pair graph: an
@@ -1364,7 +1376,7 @@ object Similarity {
     // map-side coalesce. Initial labels FUSE the first propagation step:
     // min(self, direct neighbors) comes out of the same aggregation that
     // enumerates the vertex set, saving one full checkpoint+count round.
-    var labels = truncateLineage(edges
+    var labels = truncate(edges
       .groupBy($"id_a".as("doc_id")).agg(min($"id_b").as("nbmin"))
       .select($"doc_id", least($"doc_id", $"nbmin").as("cluster")))
     var changed = 1L
@@ -1383,7 +1395,7 @@ object Similarity {
       // O(component diameter) rounds into O(log d) — measured 8 → 4
       // rounds here, and the difference between unbounded and
       // logarithmic iteration count on a 100 TB pair graph.
-      val next = truncateLineage(stepped
+      val next = truncate(stepped
         .join(stepped.select($"doc_id".as("j_id"), $"mid".as("j_min")),
           $"mid" === $"j_id", "left_outer")
         .select($"doc_id",
@@ -1392,17 +1404,12 @@ object Similarity {
       // convergence check is a filter-count on the materialized round
       // result — no extra join against the previous labels
       changed = next.filter($"chg").count()
-      freeCheckpoint(labels) // next is materialized; prev blocks are dead
+      free(labels) // next is materialized; prev blocks are dead
       labels = next.select($"doc_id", $"cluster")
       rounds += 1
     }
     require(changed == 0, s"label propagation did not converge in $rounds rounds")
-    Tables.documents(spark, sfDir).select($"doc_id")
-      .join(Residue.track("dedup_cluster.labels", labels),
-        Seq("doc_id"), "left_outer")
-      .select($"doc_id", coalesce($"cluster", $"doc_id").as("cluster"))
-      .select($"doc_id", $"cluster", ($"doc_id" === $"cluster").as("kept"))
-      .orderBy($"doc_id")
+    (labels, rounds)
   }
 
   /** Large-star/small-star connected components (Kiveris et al.,

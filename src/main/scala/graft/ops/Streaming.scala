@@ -28,13 +28,28 @@ import graft.{GraftSession, Tables}
   * longs: java.sql.Timestamp ordering is only ms-precise via getTime, and
   * the oracle orders by full µs. */
 case class KeyedEvent(user_id: Long, event_id: Long, us: Long, event_type: String)
-case class JobState(n: Long, lastUs: Long, lastId: Long, lastType: String)
+case class JobState(n: Long, lastUs: Long, lastId: Long, lastType: String) {
+  def toUpdate(key: Long): JobUpdate = JobUpdate(key, n, lastUs, lastType)
+}
+
+/** The keyed status fold every status store shares: count the events and
+  * keep the newest by (us, event_id). Count and max are commutative, so
+  * group-iterator order cannot change the result. */
+object JobState {
+  val zero: JobState = JobState(0L, Long.MinValue, Long.MinValue, "")
+
+  def fold(s: JobState, events: Iterator[KeyedEvent]): JobState =
+    events.foldLeft(s) { (s, e) =>
+      val newer = e.us > s.lastUs || (e.us == s.lastUs && e.event_id > s.lastId)
+      if (newer) JobState(s.n + 1, e.us, e.event_id, e.event_type)
+      else s.copy(n = s.n + 1)
+    }
+}
 case class JobUpdate(user_id: Long, n_events: Long, lastUs: Long, event_type: String)
 
 /** The keyed status fold on the Spark-4 arbitrary-state API: typed
   * ValueState + StatefulProcessor (see Streaming.streamTwsState). The fold
-  * is the same commutative max/count as the flatMapGroupsWithState twin —
-  * group-iterator order cannot change the result. */
+  * is [[JobState.fold]], shared with the flatMapGroupsWithState twin. */
 class StatusProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[Long, KeyedEvent, JobUpdate] {
   import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
   @transient private var state: ValueState[JobState] = _
@@ -45,16 +60,9 @@ class StatusProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[L
 
   override def handleInputRows(key: Long, rows: Iterator[KeyedEvent],
                                timers: TimerValues): Iterator[JobUpdate] = {
-    var s = Option(state.get()).getOrElse(JobState(0L, Long.MinValue, Long.MinValue, ""))
-    rows.foreach { e =>
-      val newer = e.us > s.lastUs || (e.us == s.lastUs && e.event_id > s.lastId)
-      s = JobState(s.n + 1,
-        if (newer) e.us else s.lastUs,
-        if (newer) e.event_id else s.lastId,
-        if (newer) e.event_type else s.lastType)
-    }
+    val s = JobState.fold(Option(state.get()).getOrElse(JobState.zero), rows)
     state.update(s)
-    Iterator(JobUpdate(key, s.n, s.lastUs, s.lastType))
+    Iterator(s.toUpdate(key))
   }
 }
 
@@ -195,16 +203,9 @@ class TtlStatusProcessor(ttl: java.time.Duration)
 
   override def handleInputRows(key: Long, rows: Iterator[KeyedEvent],
                                timers: TimerValues): Iterator[JobUpdate] = {
-    var s = Option(state.get()).getOrElse(JobState(0L, Long.MinValue, Long.MinValue, ""))
-    rows.foreach { e =>
-      val newer = e.us > s.lastUs || (e.us == s.lastUs && e.event_id > s.lastId)
-      s = JobState(s.n + 1,
-        if (newer) e.us else s.lastUs,
-        if (newer) e.event_id else s.lastId,
-        if (newer) e.event_type else s.lastType)
-    }
+    val s = JobState.fold(Option(state.get()).getOrElse(JobState.zero), rows)
     state.update(s)
-    Iterator(JobUpdate(key, s.n, s.lastUs, s.lastType))
+    Iterator(s.toUpdate(key))
   }
 }
 
@@ -235,16 +236,9 @@ class InitStatusProcessor
 
   override def handleInputRows(key: Long, rows: Iterator[KeyedEvent],
                                timers: TimerValues): Iterator[JobUpdate] = {
-    var s = Option(state.get()).getOrElse(JobState(0L, Long.MinValue, Long.MinValue, ""))
-    rows.foreach { e =>
-      val newer = e.us > s.lastUs || (e.us == s.lastUs && e.event_id > s.lastId)
-      s = JobState(s.n + 1,
-        if (newer) e.us else s.lastUs,
-        if (newer) e.event_id else s.lastId,
-        if (newer) e.event_type else s.lastType)
-    }
+    val s = JobState.fold(Option(state.get()).getOrElse(JobState.zero), rows)
     state.update(s)
-    Iterator(JobUpdate(key, s.n, s.lastUs, s.lastType))
+    Iterator(s.toUpdate(key))
   }
 }
 
@@ -1782,16 +1776,9 @@ object Streaming {
       .flatMapGroupsWithState[JobState, JobUpdate](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, events: Iterator[KeyedEvent], state: GroupState[JobState]) =>
-          var s = state.getOption.getOrElse(JobState(0L, Long.MinValue, Long.MinValue, ""))
-          events.foreach { e =>
-            val newer = e.us > s.lastUs || (e.us == s.lastUs && e.event_id > s.lastId)
-            s = JobState(s.n + 1,
-              if (newer) e.us else s.lastUs,
-              if (newer) e.event_id else s.lastId,
-              if (newer) e.event_type else s.lastType)
-          }
+          val s = JobState.fold(state.getOption.getOrElse(JobState.zero), events)
           state.update(s)
-          Iterator(JobUpdate(key, s.n, s.lastUs, s.lastType))
+          Iterator(s.toUpdate(key))
       }.toDF()
       .select(Seq(lit("fmgws").as("kind"), col("user_id"), col("event_type")) ++
         padQuota ++ Seq(col("n_events"), col("lastUs")) ++ padStatic ++ padCsv: _*)

@@ -236,7 +236,7 @@ class SimilaritySpec extends SparkSuite {
     // -1 everywhere and the extra join key is a constant match)
     val e = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-    val routed = Similarity.withPairRoute(e, Similarity.maxExactLabel(spark))
+    val routed = Similarity.withPairRoute(e, Similarity.MaxExactLabel)
     assert(routed.select($"route_bkt").distinct().as[Int].collect().toSeq == Seq(-1))
   }
 
@@ -420,6 +420,19 @@ class SimilaritySpec extends SparkSuite {
     assert((0L to 31L).forall(n => got(n) == 0L),
       s"chain not contracted to the min root: $got")
     assert(rounds <= 8, s"expected O(log n) rounds on a 32-chain, got $rounds")
+  }
+
+  test("label propagation resolves a long chain to its min root in <= 8 rounds") {
+    // the same 32-node path graph (diameter 31): pointer jumping halves
+    // the remaining distance each round, so it stays within the
+    // contraction bound
+    val chain = (0L until 31L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (labels, rounds) = Similarity.propagateLabels(chain,
+      df => df.localCheckpoint(), _ => ())
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((0L to 31L).forall(n => got(n) == 0L),
+      s"chain not resolved to the min root: $got")
+    assert(rounds <= 8, s"expected O(log d) rounds on a 32-chain, got $rounds")
   }
 
   test("minhash candidates are a superset of high-jaccard pairs") {
