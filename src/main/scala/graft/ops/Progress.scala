@@ -30,6 +30,14 @@ object Progress {
   final class StatusStore {
     private val m = new java.util.concurrent.ConcurrentHashMap[String, Status]()
     def update(jobId: String, s: Status): Unit = m.put(jobId, s)
+    /** A progress tick: report `seen` rows on the job's current step once
+      * it is ≥ `cadence` past the count last reported. A tick never moves
+      * the step and is dropped once the job has ended: the listener bus
+      * can deliver it after later steps were set. */
+    def tick(jobId: String, seen: Long, cadence: Long): Unit =
+      m.computeIfPresent(jobId, (_, s) =>
+        if (s.step.startsWith("JOB_") || seen - s.processed < cadence) s
+        else s.copy(message = s"rows so far: $seen", processed = seen))
     def get(jobId: String): Status =
       m.getOrDefault(jobId, Status("NOT_FOUND", "unknown job", 0L, 0L))
     def snapshot: Map[String, Status] = {
@@ -48,15 +56,8 @@ object Progress {
     val spark = df.sparkSession
     val acc = spark.sparkContext.longAccumulator(s"graft_rows_$jobId")
     val listener = new SparkListener {
-      @volatile private var lastReported = 0L
-      override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-        val seen = acc.value
-        if (seen - lastReported >= cadence) {
-          lastReported = seen
-          store.update(jobId,
-            Status("PROCESSING", s"rows so far: $seen", seen, -1L))
-        }
-      }
+      override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
+        store.tick(jobId, acc.value, cadence)
     }
     spark.sparkContext.addSparkListener(listener)
     val enc = org.apache.spark.sql.Encoders.row(df.schema)
@@ -72,6 +73,7 @@ object Progress {
   def runInstrumentedIngest(spark: SparkSession, sfDir: String,
                             jobId: String, store: StatusStore): Status = {
     store.update(jobId, Status("INIT", "starting", 0L, -1L))
+    store.update(jobId, Status("PROCESSING", "classifying", 0L, -1L))
     val classified = Ingest.classified(spark, sfDir)
     val (counted, detach) = instrumented(classified, jobId, store)
     try {

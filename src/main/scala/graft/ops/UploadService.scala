@@ -2,10 +2,10 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{ExecutionContext, Future}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.GraftSession
 
 /** The reference's COMPLETE user-facing workflow as one Spark-native
@@ -24,10 +24,10 @@ import graft.GraftSession
   * holds; CHUNK_COMMIT vs ALL_OR_NOTHING → bounded `maxRecordsPerFile`
   * task commits vs one atomic job commit; the error CSV side-channel →
   * comma-stripped text sink; the final UploadResult(processed, inserted,
-  * failed, errorReport, errorCounts) → one global aggregate over the
-  * cached classified frame. At 100 TB the same calls hold: the driver
-  * hands out job ids, executors stream the file splits, and status flows
-  * through accumulators — nothing here is single-node. */
+  * failed, errorReport, errorCounts) → an `Observation` of per-verdict
+  * counts on the load write's own pass. At 100 TB the same calls hold:
+  * the driver hands out job ids, executors stream the file splits, and
+  * status flows through accumulators — nothing here is single-node. */
 object UploadService {
 
   sealed trait CommitMode
@@ -58,15 +58,19 @@ object UploadService {
     * still reach the CSV scan. With n the scan's split count (chosen by
     * Spark from the file size), every stage runs n tasks or one, and an
     * upload starts these Spark jobs:
-    *  - `zipWithIndex`'s partition-size job, only when n > 1;
-    *  - `collect`: parse, hash-partition by key into n, dedup window and
-    *    classifier (filling the cache), one global aggregate giving the
-    *    inserted count and one count per reason;
-    *  - `parquet`: the valid rows from the cache → the items load;
-    *  - `text`: the rejected rows from the cache, range-partitioned by
-    *    line id into n sorted parts, so the part files hold the report in
-    *    line order (the range bounds add a sampling job when n > 1).
-    * A single-split upload therefore runs 3 jobs. */
+    *  - `parquet`: parse, stage, dedup window and classifier (filling the
+    *    cache), the valid rows → the items load; an `Observation` on the
+    *    same pass gives the inserted count and one count per reason. At
+    *    n = 1 the one split is the one partition the dedup window needs,
+    *    so there is no exchange; at n > 1 the rows are hash-partitioned by
+    *    key into n;
+    *  - `text`: the rejected rows from the cache, sorted by line id into
+    *    one part at n = 1, else range-partitioned by line id into n sorted
+    *    parts (the range bounds add a sampling job), so the part files
+    *    hold the report in line order.
+    * A single-split upload therefore runs 2 jobs and no shuffle. The
+    * WRITING status is set before the load write, so it carries no
+    * count; JOB_COMPLETE carries the final counts. */
   final class Service(spark: SparkSession, existing: DataFrame, outBase: String)
                      (implicit ec: ExecutionContext = ExecutionContext.global) {
 
@@ -114,50 +118,43 @@ object UploadService {
     private def process(jobId: String, csvPath: String, mode: CommitMode,
                         chunkRows: Int): UploadResult = try {
       import session.implicits._
+      statusStore.update(jobId, Progress.Status("PROCESSING", "classifying", 0L, -1L))
       // header CSV read with an explicit four-string schema (no header
       // inference job). An empty cell reads as null, like a missing one;
       // only a row with a token count other than four gets a
       // `_corrupt_record`, so "too few columns" is a corrupt row whose
       // last cell is missing (a long row keeps its first four cells).
-      // Explicit global line id via zipWithIndex: contiguous and
-      // independent of the split layout (a CSV big enough to be read as
-      // multiple splits gets the same ids), unlike
-      // monotonically_increasing_id whose values encode the partitioning.
       val parsed = session.read.option("header", "true")
         .option("mode", "PERMISSIVE").schema(UploadSchema).csv(csvPath)
-      // persist the parsed rows across zipWithIndex's two passes: with
-      // several splits it first runs a partition-size job, then the data
-      // pass — uncached, both would re-scan and re-parse the CSV
-      val parsedRdd = parsed.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = math.max(1, parsedRdd.getNumPartitions)
-      val raw = session.createDataFrame(
-        parsedRdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
-        parsed.schema.add("line_id", LongType))
-        .select($"line_id",
-          col("externalId").as("external_id_raw"),
-          col("name").as("name_raw"),
-          col("quantity").as("quantity_raw"),
-          col("expiryDate").as("expiry_raw"),
-          (col("_corrupt_record").isNull || col("expiryDate").isNotNull).as("arity_ok"))
-        .repartition(n, Ingest.trimmed($"external_id_raw"))
+      // n, the scan's split count, read off the planned scan (no job)
+      val n = math.max(1, parsed.queryExecution.sparkPlan.collectFirst {
+        case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions }.get)
+      // the line id (split's byte offset, position in the split) orders
+      // rows as the file does at any split count; it is taken on the scan,
+      // the only place input_file_block_start() is defined
+      val lined = parsed.select(
+        struct(input_file_block_start(), monotonically_increasing_id()).as("line_id"),
+        col("externalId").as("external_id_raw"),
+        col("name").as("name_raw"),
+        col("quantity").as("quantity_raw"),
+        col("expiryDate").as("expiry_raw"),
+        (col("_corrupt_record").isNull || col("expiryDate").isNotNull).as("arity_ok"))
+      // the dedup window needs each key's rows in one partition: one split
+      // already is one (coalesce(1) declares it without an exchange); n
+      // splits are hash-partitioned by key
+      val raw = if (n == 1) lined.coalesce(1)
+        else lined.repartition(n, Ingest.trimmed($"external_id_raw"))
       val classified = Ingest.classifyStaged(raw, markExisting).cacheOnce()
       val (counted, detach) = Progress.instrumented(classified, jobId, statusStore)
       try {
-        statusStore.update(jobId, Progress.Status("PROCESSING", "classifying", 0L, -1L))
-        // one global aggregate fills the cache and gives the counters and
-        // the error histogram
-        val counts = counted.agg(count_if($"error".isNull),
-          Ingest.Reasons.map(r => count_if($"error" === r)): _*).collect().head
-        val inserted = counts.getLong(0)
-        val errorCounts = Ingest.Reasons.zipWithIndex
-          .map { case (r, i) => r -> counts.getLong(i + 1) }.filter(_._2 > 0).toMap
-        val failed = errorCounts.values.sum
-        val processed = inserted + failed
-
-        statusStore.update(jobId, Progress.Status("WRITING",
-          s"loading $inserted valid rows", processed, processed))
+        statusStore.update(jobId, Progress.Status("WRITING", "loading valid rows", 0L, -1L))
+        // the load write's own pass fills the cache and yields the inserted
+        // count and one count per reason
+        val counts = Observation(s"upload-$jobId")
         val loadedDir = s"$outBase/$jobId/items"
-        val valid = classified.filter($"error".isNull)
+        val valid = counted.observe(counts, count_if($"error".isNull).as("inserted"),
+            Ingest.Reasons.map(r => count_if($"error" === r).as(r)): _*)
+          .filter($"error".isNull)
           .select($"ext".as("externalId"), $"nam".as("name"),
             expr("try_cast(qty AS INT)").as("quantity"),
             try_to_date($"exp", "yyyy-MM-dd").as("expiryDate"))
@@ -168,10 +165,18 @@ object UploadService {
           case AllOrNothing =>
             valid.write.mode(SaveMode.Overwrite).parquet(loadedDir)
         }
+        val got = counts.get.asInstanceOf[Map[String, Long]]
+        val inserted = got("inserted")
+        val errorCounts = Ingest.Reasons.map(r => r -> got(r)).filter(_._2 > 0).toMap
+        val failed = errorCounts.values.sum
+        val processed = inserted + failed
 
+        // the report in line order: one sorted partition at one split,
+        // else n line-id ranges, so the part files follow the file
         val errorReportDir = s"$outBase/$jobId/errors"
-        classified.filter($"error".isNotNull)
-          .repartitionByRange(n, $"line_id").sortWithinPartitions($"line_id")
+        val rejected = classified.filter($"error".isNotNull)
+        (if (n == 1) rejected else rejected.repartitionByRange(n, $"line_id"))
+          .sortWithinPartitions($"line_id")
           .select(Ingest.reportLine.as("report_line"))
           .write.mode(SaveMode.Overwrite).text(errorReportDir)
 
@@ -181,7 +186,6 @@ object UploadService {
       } finally {
         detach()
         classified.unpersist()
-        parsedRdd.unpersist(blocking = false)
       }
     } catch {
       case e: Throwable =>

@@ -11,6 +11,24 @@ class ProgressSpec extends SparkSuite {
     assert(store.get("nope").step == "NOT_FOUND")
   }
 
+  test("a progress tick moves the row count at its cadence, never the step, and not after the job ended") {
+    val store = new Progress.StatusStore
+    val writing = Progress.Status("WRITING", "loading valid rows", 0L, -1L)
+    store.update("j", writing)
+    store.tick("j", 4999L, 5000L)
+    assert(store.get("j") == writing)
+    store.tick("j", 5000L, 5000L)
+    assert(store.get("j") == Progress.Status("WRITING", "rows so far: 5000", 5000L, -1L))
+    store.tick("j", 9999L, 5000L)
+    assert(store.get("j").processed == 5000L)
+    val done = Progress.Status("JOB_COMPLETE", "inserted=1 failed=0", 1L, 1L)
+    store.update("j", done)
+    store.tick("j", 20000L, 5000L)
+    assert(store.get("j") == done)
+    store.tick("unknown", 5000L, 5000L)
+    assert(store.get("unknown").step == "NOT_FOUND")
+  }
+
   test("instrumented ingest walks INIT -> PROCESSING -> JOB_COMPLETE") {
     val store = new Progress.StatusStore
     val done = Progress.runInstrumentedIngest(spark, sfDir, "job1", store)

@@ -31,6 +31,17 @@ class SourceGateSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"hand-rolled get-or-build maps: ${hits.mkString(", ")}")
   }
 
+  test("UploadService takes no RDD hop: no .rdd or zipWithIndex on a code line") {
+    val hits = codeLines().collect {
+      case (p, i, line) if p == "graft/ops/UploadService.scala" &&
+          (line.contains(".rdd") || line.contains("zipWithIndex")) => s"$p:$i"
+    }
+    // line ids come from the scan and the split count from the planned
+    // scan; a Dataset → RDD → Dataset round trip re-plans and re-encodes
+    // every row
+    assert(hits.isEmpty, s"RDD hops in the upload: ${hits.mkString(", ")}")
+  }
+
   test("the settable spark.graft.* keys are the five pinned ones, each in its one file") {
     val key = """"spark\.graft\.([A-Za-z]+(?:\.[A-Za-z]+)*)""".r
     val found = codeLines()

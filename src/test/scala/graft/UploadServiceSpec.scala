@@ -145,6 +145,117 @@ class UploadServiceSpec extends SparkSuite {
     assert(jobs <= 4, s"$jobs Spark jobs for one single-split upload")
   }
 
+  /** Runs each submitted upload on a global thread once `go` opens, with
+    * its Spark jobs tagged "upload". */
+  private def taggedAfter(go: java.util.concurrent.CountDownLatch): ExecutionContext = {
+    val sc = spark.sparkContext
+    new ExecutionContext {
+      def execute(r: Runnable): Unit = ExecutionContext.global.execute { () =>
+        go.await()
+        sc.setLocalProperty(SparkSuite.JobTag, "upload")
+        try r.run() finally sc.setLocalProperty(SparkSuite.JobTag, null)
+      }
+      def reportFailure(t: Throwable): Unit = ExecutionContext.global.reportFailure(t)
+    }
+  }
+
+  test("a single-split upload is 2 Spark jobs, writes no shuffle, walks INIT to JOB_COMPLETE") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val (csv, nClean, nBroken) = fixture()
+    val out = Files.createTempDirectory("graft_upload_two").toString
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val svc = new UploadService.Service(spark,
+      Seq.empty[String].toDF("external_id"), out)(taggedAfter(go))
+    // shuffle bytes written by the tasks of the upload's jobs
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(SparkSuite.JobTag) == "upload"))
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ((res, walk), jobs) = countJobs("upload") {
+        val jobId = svc.submit(csv, UploadService.AllOrNothing)
+        // the job is held, so the first poll sees INIT; then every step
+        // change is recorded until the job ends
+        val walk = scala.collection.mutable.ArrayBuffer(svc.status(jobId).step)
+        go.countDown()
+        while (!walk.last.startsWith("JOB_")) {
+          val step = svc.status(jobId).step
+          if (step != walk.last) walk += step
+        }
+        (svc.await(jobId), walk.toSeq)
+      }
+      assert(res.inserted == nClean && res.failed == nBroken)
+      assert(walk == Seq("INIT", "PROCESSING", "WRITING", "JOB_COMPLETE"))
+      assert(jobs <= 2, s"$jobs Spark jobs for one single-split upload")
+      // countJobs has flushed the listener bus past the upload's tasks
+      assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes written")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("many splits keep file order: first occurrences win, the report follows the lines") {
+    val dir = Files.createTempDirectory("graft_upload_many").toString
+    val csv = s"$dir/upload.csv"
+    val clean = Sinks.genSynthetic(spark, 400).collect().map(r =>
+      s"${r.getString(0)},${r.getString(1)},${r.getInt(2)},${r.getString(3)}")
+    val broken = Seq(
+      "E900001,BadQty,notanint,2026-02-02",
+      "1000000000,DupOfFirst,5,2026-02-02",   // duplicate of line 1
+      "E900002,BadDate,7,02/02/2026",
+      "1000000399,DupOfLast,6,2026-02-02",    // duplicate of line 400
+      "E900003,,8,2026-02-02")
+    Files.write(Paths.get(csv), ("externalId,name,quantity,expiryDate" +: (clean ++ broken))
+      .mkString("", "\n", "\n").getBytes)
+    val out = Files.createTempDirectory("graft_upload_many_out").toString
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "300") // ~15 KB CSV → dozens of input splits
+    try {
+      val splits = spark.read.option("header", "true").csv(csv).rdd.getNumPartitions
+      assert(splits > 20, s"$splits splits")
+      val svc = new UploadService.Service(spark,
+        Seq.empty[String].toDF("external_id"), out)
+      val res = svc.await(svc.submit(csv, UploadService.AllOrNothing))
+      assert((res.inserted, res.failed) == ((400L, 5L)))
+      val names = spark.read.parquet(res.loadedDir)
+        .filter($"externalId".isin("1000000000", "1000000399"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(names.keySet == Set("1000000000", "1000000399"))
+      assert(names.values.forall(_.startsWith("Item_")), s"a later duplicate won: $names")
+      val report = partFiles(res.errorReportDir).flatMap(f =>
+        scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(f.toPath)).asScala)
+      assert(report == Seq(
+        "E900001,BadQty,notanint,2026-02-02,quantity invalid",
+        "1000000000,DupOfFirst,5,2026-02-02,duplicate externalId",
+        "E900002,BadDate,7,02/02/2026,expiryDate invalid (expected yyyy-MM-dd)",
+        "1000000399,DupOfLast,6,2026-02-02,duplicate externalId",
+        "E900003,,8,2026-02-02,name empty"))
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("empty inputs reach JOB_COMPLETE with zero counts: header only, zero bytes") {
+    val dir = Files.createTempDirectory("graft_upload_none").toString
+    val out = Files.createTempDirectory("graft_upload_none_out").toString
+    val svc = new UploadService.Service(spark,
+      Seq.empty[String].toDF("external_id"), out)
+    for ((name, body) <- Seq("header.csv" -> "externalId,name,quantity,expiryDate\n",
+                             "zero.csv" -> "")) {
+      val csv = s"$dir/$name"
+      Files.write(Paths.get(csv), body.getBytes)
+      val jobId = svc.submit(csv, UploadService.AllOrNothing)
+      val res = svc.await(jobId)
+      assert(svc.status(jobId).step == "JOB_COMPLETE", name)
+      assert((res.processed, res.inserted, res.failed) == ((0L, 0L, 0L)), name)
+      assert(res.errorCounts.isEmpty, name)
+    }
+  }
+
   test("the existing-key index is held: the Service sees existing as it was when built") {
     val dir = Files.createTempDirectory("graft_upload_held").toString
     val existingDir = s"$dir/existing.parquet"
